@@ -1,16 +1,18 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Single place for performance-relevant session configuration.
   *
-  * Tuned for local[32] testing but designed for cluster scale: AQE handles
-  * runtime re-planning (skew joins, partition coalescing), broadcast
-  * threshold covers the dimension tables, and shuffle partitions default to
-  * the core count (overridden by the cluster at real scale).
+  * The same confs run locally and on a cluster: AQE handles runtime
+  * re-planning (skew joins, partition coalescing), the broadcast threshold
+  * covers the dimension tables, and the caller picks the master and the
+  * shuffle width ([[get]] takes both from spark-submit when it sets them,
+  * else from the local core count).
   */
 object GraftSession {
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
@@ -50,49 +52,19 @@ object GraftSession {
       .config("spark.sql.analyzer.failAmbiguousSelfJoin", "false")
       .config("spark.ui.enabled", "false")
 
-  /** [[builder]] plus `SPARK_GRAFT_EXTRA_CONF` overrides — `k=v;k=v` pairs
-    * applied LAST, so a deployment (or an A/B audit) can re-dial any
-    * session conf without a code edit: the scale-dependent knobs
-    * (shuffle width, split size, AQE thresholds) are cluster-sized in
-    * production while the committed defaults keep the local bench
-    * comparable across rounds. Restricted to `spark.*` keys so a typo'd
-    * pair fails loudly instead of silently configuring nothing. */
-  def builderWithEnv(master: String = "local[32]",
-      shufflePartitions: Int = 32): SparkSession.Builder = {
-    val b = builder(master, shufflePartitions)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .foreach { pair =>
-        val i = pair.indexOf('=')
-        require(i > 0 && pair.startsWith("spark."),
-          s"SPARK_GRAFT_EXTRA_CONF pair must be spark.<key>=<value>; got '$pair'")
-        val key = pair.substring(0, i).trim
-        // the env hook is a TUNING seam, not a semantics seam: ANSI mode
-        // and the session timezone change what casts/date functions
-        // COMPUTE (while e.g. Clf.train's exactAcc kernel keeps non-ANSI
-        // Cast semantics compiled in), so an override here would silently
-        // break engine↔kernel/oracle bit-parity. Refuse loudly.
-        require(!semanticKeys(key),
-          s"SPARK_GRAFT_EXTRA_CONF may not override semantics-relevant conf '$key'")
-        // every applied override is logged so a bench artifact records
-        // what it actually ran with (before/after comparability)
-        System.err.println(s"graft: SPARK_GRAFT_EXTRA_CONF override: $pair")
-        b.config(key, pair.substring(i + 1).trim)
-      }
-    b
-  }
+  /** The master and shuffle width for [[get]]: the `spark.master` and
+    * `spark.sql.shuffle.partitions` already in `conf` (spark-submit and
+    * `-Dspark.*` put them there), else `local[cores]` and `cores`.
+    */
+  private[graft] def masterAndPartitions(conf: SparkConf, cores: Int): (String, Int) =
+    (conf.get("spark.master", s"local[$cores]"),
+      conf.getOption("spark.sql.shuffle.partitions").fold(cores)(_.toInt))
 
-  /** Confs that change query SEMANTICS rather than execution shape —
-    * rejected by [[builderWithEnv]] (see the parity rationale there). */
-  private val semanticKeys = Set(
-    "spark.sql.ansi.enabled",
-    "spark.sql.session.timeZone",
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.int96RebaseModeInRead",
-    "spark.sql.parquet.datetimeRebaseModeInRead")
-
+  /** The session of the production mains. */
   def get(): SparkSession = {
-    val s = builder().getOrCreate()
+    val (master, shufflePartitions) =
+      masterAndPartitions(new SparkConf(), Runtime.getRuntime.availableProcessors)
+    val s = builder(master, shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -29,8 +29,8 @@ object BagIngest {
   def run(spark: SparkSession, bags: String, out: String, writePng: Boolean,
       piiRegions: Option[DataFrame] = None, imageDedup: Option[Int] = None,
       voxel: Option[Double] = None, audioDedup: Option[Int] = None): Unit = {
-    writeTables(spark, bags, out, SaveMode.Overwrite, writePng, piiRegions,
-      imageDedup = imageDedup, voxel = voxel, audioDedup = audioDedup)
+    writeTablesOf(spark, RosbagReader.messages(spark, bags), out, SaveMode.Overwrite, writePng,
+      piiRegions, imageDedup = imageDedup, voxel = voxel, audioDedup = audioDedup)
     // per-recording ego-motion rollup over the just-landed odometry table
     // (TrajectoryOps — path/speeds/tortuosity/dwell + the pose-jump and
     // frozen-localizer tripwires). BATCH ONLY by design: the statistics
@@ -42,17 +42,10 @@ object BagIngest {
       .write.mode(SaveMode.Overwrite).parquet(s"$out/trajectory")
   }
 
-  /** One demux pass over `bags` -> all the lake tables written with
+  /** One demux pass over `rawMsgs` -> all the lake tables written with
     * `mode` (Overwrite for the batch job; the streaming job overwrites a
     * per-batch subdirectory via `tableSuffix` for idempotent retries).
     */
-  def writeTables(spark: SparkSession, bags: String, out: String, mode: SaveMode,
-      writePng: Boolean, piiRegions: Option[DataFrame],
-      imageDedup: Option[Int] = None, voxel: Option[Double] = None,
-      audioDedup: Option[Int] = None): Unit =
-    writeTablesOf(spark, RosbagReader.messages(spark, bags), out, mode, writePng,
-      piiRegions, imageDedup = imageDedup, voxel = voxel, audioDedup = audioDedup)
-
   def writeTablesOf(spark: SparkSession, rawMsgs: org.apache.spark.sql.Dataset[RosbagReader.RawMessage],
       out: String, mode: SaveMode, writePng: Boolean, piiRegions: Option[DataFrame],
       tableSuffix: String = "", imageDedup: Option[Int] = None,

@@ -891,8 +891,8 @@ object DedupOps {
     // the converged fixpoint is unique; the final snapshot stays cached for
     // the caller's (lazy) consumption — so this call cannot free it itself.
     // As with postingCaches, each invocation instead releases the PREVIOUS
-    // call's snapshot under the same key, bounding repeat callers (Bench
-    // best-of-3, registerQueries) to one live labeling per (session, caller).
+    // call's snapshot under the same key, bounding repeat callers (a
+    // benchmark loop, registerQueries) to one live labeling per (session, caller).
     groupsCaches.put((s, cacheKey), labelsRdd)
     lastPropagationRounds.set(round)
     labels

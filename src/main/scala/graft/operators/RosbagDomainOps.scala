@@ -483,45 +483,16 @@ object RosbagDomainOps {
     kept
   }
 
-  /** One (ti, image, class) group's COCO-greedy assignment loop — pure
-    * and Spark-free so the property suite can fuzz it against a naive
-    * driver-side sweep (the [[nmsGroup]] convention). Input: candidate
+  /** One (ti, image, class) group's COCO-greedy assignment loop:
+    * [[greedyMatchGroupIgnore]] with no gt ignored. Input: candidate
     * pairs (gt_id, pred_id, iou, si) already gated at the group's IoU
     * threshold. Detections walk in (score DESC, pred_id) order; each
     * claims the FREE gt with the highest IoU (ties by gt_id ASC) —
     * pycocotools' per-image assignment. Returns the matched pred_ids.
     */
   private[graft] def greedyMatchGroup(
-      cands: Array[(Long, Long, Double, Long)]): scala.collection.Seq[Long] = {
-    val byPred = cands.groupBy(_._2)
-    // One score per detection: every candidate row of a pred carries that
-    // pred's si (the pair join replicates the detection's score) — made
-    // EXPLICIT here rather than silently read off an arbitrary .head, and
-    // ordered by an explicit (si DESC, pred_id ASC) Ordering instead of
-    // the -x negation idiom (which overflows at Long.MinValue).
-    val siOf = byPred.map { case (p, g) =>
-      val si = g(0)._4
-      require(g.forall(_._4 == si),
-        s"greedyMatchGroup: candidate rows of pred $p carry differing scores")
-      p -> si
-    }
-    val scoreDescPredAsc: Ordering[Long] = Ordering.fromLessThan { (a, b) =>
-      val sa = siOf(a); val sb = siOf(b)
-      if (sa != sb) sa > sb else a < b
-    }
-    val order = byPred.keys.toArray.sorted(scoreDescPredAsc)
-    val used = scala.collection.mutable.HashSet.empty[Long]
-    val out = new scala.collection.mutable.ArrayBuffer[Long](order.length)
-    order.foreach { p =>
-      val free = byPred(p).filter(t => !used.contains(t._1))
-      if (free.nonEmpty) {
-        val best = free.minBy(t => (-t._3, t._1))
-        used += best._1
-        out += p
-      }
-    }
-    out
-  }
+      cands: Array[(Long, Long, Double, Long)]): scala.collection.Seq[Long] =
+    greedyMatchGroupIgnore(cands.map(t => (t._1, t._2, t._3, t._4, false))).map(_._1)
 
   /** q29d — the NMS pass as a driver query: the [[scoredDetections]] model
     * through [[nms]] at the reference's dials (thresh 0.45, topk 400),
@@ -796,7 +767,7 @@ object RosbagDomainOps {
   }
 
   /** One (ti, area, maxDet, image, class) group's IGNORE-AWARE COCO
-    * greedy assignment — [[greedyMatchGroup]] extended with pycocotools'
+    * greedy assignment — the [[greedyMatchGroup]] loop with pycocotools'
     * area-range ignore semantics (cocoeval.py evaluateImg): ground truths
     * outside the cell's area range are IGNORE rather than absent, a
     * detection prefers the best free NON-ignored gt and falls back to the
@@ -813,6 +784,11 @@ object RosbagDomainOps {
   private[graft] def greedyMatchGroupIgnore(
       cands: Array[(Long, Long, Double, Long, Boolean)]): scala.collection.Seq[(Long, Boolean)] = {
     val byPred = cands.groupBy(_._2)
+    // One score per detection: every candidate row of a pred carries that
+    // pred's si (the pair join replicates the detection's score) — made
+    // EXPLICIT here rather than silently read off an arbitrary .head, and
+    // ordered by an explicit (si DESC, pred_id ASC) Ordering instead of
+    // the -x negation idiom (which overflows at Long.MinValue).
     val siOf = byPred.map { case (p, g) =>
       val si = g(0)._4
       require(g.forall(_._4 == si),

@@ -623,7 +623,12 @@ object SimilarityOps {
       s.createDataFrame(
         java.util.Arrays.asList(rows.sortBy(_.getLong(0)): _*),
         perArm.head._3.schema)
-    } finally exact.unpersist(blocking = false)
+    } finally {
+      exact.unpersist(blocking = false)
+      // the truth's description was set on the calling thread: clear it so
+      // the caller's later jobs are not labelled q107b
+      s.sparkContext.setJobDescription(null)
+    }
   }
 
   /** q68c — the recall-vs-nprobe CURVE: q68b ranks the arms at the frozen

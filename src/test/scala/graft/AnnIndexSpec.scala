@@ -885,6 +885,8 @@ class AnnIndexSpec extends SparkSpec {
     val k = 10
     val rows = SimilarityOps.retrievalQualityMulti(spark, gate, k).collect()
       .map(r => r.getAs[String]("arm") -> r).toMap
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") === null,
+      "q107b must not leave its job description on the calling thread")
     assert(rows.keySet === Set("lsh_multi", "ivf_auto", "imi", "ivfpq", "ivfpq_res", "opq_ivf"))
     rows.values.foreach { r =>
       assert(r.getAs[Long]("n_queries") === 10L)
