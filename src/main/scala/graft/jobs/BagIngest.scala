@@ -19,7 +19,9 @@ import graft.sources.rosbag.RosbagReader
   *   <out>/images/      frame metadata + pixel payloads (parquet)
   *   <out>/clips/       audio buffers + stream properties (audio_common topics)
   *   <out>/laser/ odometry/ wrench/ std_msgs/   typed topic tables
+  *   <out>/generic/     (slot-path -> value) rows of every defined topic
   *   <out>/manifest/    per-recording mp4/frame manifest
+  *   <out>/trajectory/  per-recording ego-motion rollup of odometry
   *   <out>/frame_dedup/ canonical-frame manifest (with --image-dedup)
   *   <out>/lidar_voxel/ voxel-downsampled PointCloud2 points (with --voxel)
   *   <out>/png/         one real PNG file per frame (with --png)
@@ -28,23 +30,30 @@ object BagIngest {
 
   def run(spark: SparkSession, bags: String, out: String, writePng: Boolean,
       piiRegions: Option[DataFrame] = None, imageDedup: Option[Int] = None,
-      voxel: Option[Double] = None, audioDedup: Option[Int] = None): Unit = {
+      voxel: Option[Double] = None, audioDedup: Option[Int] = None): Unit =
     writeTablesOf(spark, RosbagReader.messages(spark, bags), out, SaveMode.Overwrite, writePng,
-      piiRegions, imageDedup = imageDedup, voxel = voxel, audioDedup = audioDedup)
-    // per-recording ego-motion rollup over the just-landed odometry table
-    // (TrajectoryOps — path/speeds/tortuosity/dwell + the pose-jump and
-    // frozen-localizer tripwires). BATCH ONLY by design: the statistics
-    // are per whole recording, and a streaming micro-batch holds partial
-    // recordings — the streaming job's consumers run the rollup over the
-    // compacted odometry table instead.
-    graft.operators.TrajectoryOps
-      .trajectoryStats(spark.read.parquet(s"$out/odometry"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/trajectory")
-  }
+      piiRegions, imageDedup = imageDedup, voxel = voxel, audioDedup = audioDedup,
+      trajectory = true)
 
   /** One demux pass over `rawMsgs` -> all the lake tables written with
     * `mode` (Overwrite for the batch job; the streaming job overwrites a
     * per-batch subdirectory via `tableSuffix` for idempotent retries).
+    *
+    * The demux is cached and materialized once; then the sinks that do not
+    * read each other's output land concurrently ([[graft.Branches]]), one
+    * Spark job stream per branch, since most of them are small single-task
+    * jobs that would otherwise leave the cores idle one after another:
+    * images (then the PNG sink), odometry (then the trajectory rollup),
+    * clips (then the optional stages), and laser, wrench, std_msgs, generic
+    * and manifest on their own. Every branch has ended, and the cache is
+    * released, before the call returns or rethrows the first failure.
+    *
+    * `trajectory` also lands the per-recording ego-motion rollup over the
+    * odometry table (TrajectoryOps — path/speeds/tortuosity/dwell + the
+    * pose-jump and frozen-localizer tripwires). BATCH ONLY by design: the
+    * statistics are per whole recording, and a streaming micro-batch holds
+    * partial recordings — the streaming job's consumers run the rollup over
+    * the compacted odometry table instead.
     */
   def writeTablesOf(spark: SparkSession, rawMsgs: org.apache.spark.sql.Dataset[RosbagReader.RawMessage],
       out: String, mode: SaveMode, writePng: Boolean, piiRegions: Option[DataFrame],
@@ -54,176 +63,198 @@ object BagIngest {
       frameDrift: Option[(graft.operators.TextAnalysisOps.DriftRef, Long)] = None,
       clipDrift: Option[(graft.operators.TextAnalysisOps.DriftRef, Long)] = None,
       cloudDrift: Option[(graft.operators.TextAnalysisOps.DriftRef, Long)] = None,
-      syncAudit: Option[(Long, Long)] = None): Unit = {
+      syncAudit: Option[(Long, Long)] = None, trajectory: Boolean = false): Unit = {
     def save(df: DataFrame, name: String): Unit =
       df.write.mode(mode).parquet(s"$out/$name$tableSuffix")
+    def landed(name: String): DataFrame = spark.read.parquet(s"$out/$name$tableSuffix")
 
-    // parse every bag exactly once: the demuxed message set feeds all seven
-    // output tables (the reference also demuxes in a single streaming pass)
+    // parse every bag exactly once: the demuxed message set feeds every
+    // output table (the reference also demuxes in a single streaming pass)
     val msgs = rawMsgs.persist()
-    val rawImages = RosbagReader.imagesOf(spark, msgs)
-    // PII anonymization (reference: select-labelling-imgs anonymize_PII):
-    // with a region table, pixels land in the lake already blurred
-    val images = piiRegions match {
-      case Some(regions) => ImageOps.blurFrames(spark, rawImages, regions).drop("n_blurred")
-      case None          => rawImages
-    }
-    save(images, "images")
-    save(RosbagReader.laserScansOf(spark, msgs), "laser")
-    save(RosbagReader.odometryOf(spark, msgs), "odometry")
-    save(RosbagReader.wrenchOf(spark, msgs), "wrench")
-    save(RosbagReader.stdMsgsOf(spark, msgs), "std_msgs")
-    // microphone topics (audio_common_msgs) land as the clips table —
-    // the audio twin of `images`, consumed unchanged by the
-    // AudioOps spectral/near-dup/segmentation family
-    save(RosbagReader.audioClipsOf(spark, msgs), "clips")
-    // dynamic-schema fallback: every topic with a message_definition lands
-    // as (slot-path -> value) rows even when no hand-coded decoder exists
-    save(RosbagReader.genericMessagesOf(spark, msgs), "generic")
-    // manifest columns are untouched by blur — build it from the RAW frames
-    // so the manifest sink never re-executes the blur pipeline (Catalyst
-    // cannot prune columns through the opaque mapPartitions lambda)
-    save(RosbagReader.mp4ManifestOf(rawImages), "manifest")
-    // image dedup (--image-dedup[=HAMMING]): the multimodal analogue of
-    // CorpusPrep's text-dedup stages — dHash + banded Hamming join +
-    // connected components (ImageOps.dedupGroupsFrames) over the RAW
-    // frames (blur must not perturb fingerprints), landing a
-    // canonical-frame manifest NEXT TO the images table: one row per
-    // frame with its canonical key + is_canonical, so downstream
-    // consumers (blur, resize, mp4, shard export) join against it and
-    // process each burst of near-identical frames ONCE. A left join back
-    // to the frame index makes the manifest TOTAL (frames with no
-    // near-dup are trivially their own canonical) — consumers filter
-    // is_canonical without a second anti-join against the pair table.
-    // lidar densification control (--voxel=EDGE): PointCloud2 topics land
-    // voxel-downsampled (PointCloudOps.voxelDownsample — one groupBy on
-    // cloud+voxel, DECIMAL-carrier centroids) instead of point-exact —
-    // THE pass a 100 TB lidar lake runs at ingest, since nothing
-    // downstream wants raw beam density. The full-fidelity payload stays
-    // available in the bags; the lake holds the normalized working set.
-    voxel.foreach { edge =>
-      save(graft.operators.PointCloudOps.voxelDownsample(
-        RosbagReader.pointCloudPointsOf(spark, msgs), edge), "lidar_voxel")
-    }
-    // image drift gauge (streaming ingest with a frozen brightness
-    // reference): every batch's per-frame brightness distribution is
-    // PSI-scored against the healthy-recording reference and the bucket
-    // table + rollup land in the versioned <out>/frame_drift SnapshotLake
-    // table (batch-id idempotent — a redelivered batch re-reads as the
-    // same version). A monitor, not a gate: no frame is dropped. Scored
-    // over the RAW frames (a blur region must not read as drift), the
-    // same convention the dedup fingerprints use; capture the reference
-    // from raw frames too (brightnessDriftReference on an un-blurred
-    // recording).
-    frameDrift.foreach { case (ref, batchId) =>
-      SnapshotLake.commitStreamBatch(spark, s"$out/frame_drift",
-        ImageOps.brightnessDrift(spark, rawImages, ref)
-          .withColumn(
-            "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
-        batchId)
-    }
-    // audio drift gauge: the frame gauge's contract on the microphone
-    // column — per-batch PSI of clip RMS against a frozen healthy
-    // reference, landing in the versioned <out>/clip_drift table
-    // (batch-id idempotent); a monitor, not a gate
-    clipDrift.foreach { case (ref, batchId) =>
-      SnapshotLake.commitStreamBatch(spark, s"$out/clip_drift",
-        graft.multimodal.AudioOps.rmsDrift(spark,
-            spark.read.parquet(s"$out/clips$tableSuffix"), ref)
-          .withColumn(
-            "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
-        batchId)
-    }
-    // lidar drift gauge: the same contract on the PointCloud2 column —
-    // per-batch PSI of per-sweep point population against a frozen
-    // healthy reference (PointCloudOps.cloudDriftReference), landing in
-    // the versioned <out>/cloud_drift table (batch-id idempotent); a
-    // monitor, not a gate. Scored over the RAW point stream, before any
-    // --voxel densification (a voxel dial change must not read as a
-    // failing sensor).
-    cloudDrift.foreach { case (ref, batchId) =>
-      SnapshotLake.commitStreamBatch(spark, s"$out/cloud_drift",
-        graft.operators.PointCloudOps.cloudDrift(
-            RosbagReader.pointCloudPointsOf(spark, msgs), ref)
-          .withColumn(
-            "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
-        batchId)
-    }
-    // cross-modal SENSOR-SYNC audit (q111's lake form at ingest): per
-    // (bag, window), the camera frames' alignment against each other
-    // landed modality — clip timestamps and per-sweep cloud timestamps —
-    // as one versioned <out>/sensor_sync table with a `sensor` column
-    // naming the probed arm (batch-id idempotent). A rig with a clock
-    // offset or a dropping sensor shows up here in ITS OWN arriving
-    // batch, before any fusion consumer mis-joins. Camera-only bags
-    // report all-unmatched rows (the audit's loud form of "the second
-    // modality never arrived"), never silence.
-    syncAudit.foreach { case (bucketNs, batchId) =>
-      import org.apache.spark.sql.functions.lit
-      val frames = rawImages.select("bag", "time_ns")
-      def arm(name: String, sensor: DataFrame) =
-        graft.operators.TemporalOps.sensorSyncLakeOf(frames, sensor, bucketNs)
-          .withColumn("sensor", lit(name))
-      SnapshotLake.commitStreamBatch(spark, s"$out/sensor_sync",
-        arm("clips", RosbagReader.audioClipsOf(spark, msgs)
-            .select("bag", "time_ns"))
-          .unionByName(arm("clouds", RosbagReader.pointCloudsOf(spark, msgs)
-            .select("bag", "time_ns")))
-          .withColumn("ingest_batch", lit(batchId)),
-        batchId)
-    }
-    // audio dedup (--audio-dedup[=HAMMING]): the clip twin of the image
-    // manifest below — HK fingerprint + the SHARED banded-Hamming
-    // grouping machinery, landing a canonical-clip manifest next to the
-    // clips table; with a frame index lake, clip fingerprints persist to
-    // <lake>/clip_hashes and identity is CROSS-BATCH (the same
-    // FrameDedupIndex engine, audio key space). Runs off the just-landed
-    // clips parquet so the demux is paid once.
-    audioDedup.foreach { maxHamming =>
-      val landed = spark.read.parquet(s"$out/clips$tableSuffix")
-      frameIndex match {
-        case Some((lake, batchId)) =>
-          FrameDedupIndex.probeAndCommitClips(spark, landed, lake, batchId,
-            maxHamming, sink = m => save(m, "clip_dedup"))
-        case None =>
-          save(ImageOps.totalFrameManifest(
-            landed.select("bag", "topic", "time_ns"),
-            graft.multimodal.AudioOps.dedupGroupsClipsByKey(spark, landed, maxHamming)),
-            "clip_dedup")
-      }
-    }
-    imageDedup.foreach { maxHamming =>
-      frameIndex match {
-        case Some((lake, batchId)) =>
-          // streaming ingest with a persisted fingerprint index: the
-          // manifest gains CROSS-BATCH canonical identity — a burst
-          // re-arriving in a later micro-batch collapses onto the landed
-          // canonical (first-claim), exactly as the text side's band
-          // guard. Runs over the RAW frames (blur must not perturb
-          // fingerprints), same as the batch path below.
-          FrameDedupIndex.probeAndCommit(spark, rawImages, lake, batchId,
-            maxHamming, sink = m => save(m, "frame_dedup"))
-        case None =>
-          val groups = ImageOps.dedupGroupsFrames(spark, rawImages, maxHamming)
-          save(ImageOps.totalFrameManifest(
-            rawImages.select("bag", "topic", "time_ns"), groups), "frame_dedup")
-      }
-    }
-    msgs.unpersist()
+    try {
+      // materialized before the branches start, so they read the cache
+      // instead of each waiting on the same demux task
+      msgs.count()
+      val rawImages = RosbagReader.imagesOf(spark, msgs)
 
-    if (writePng) {
-      val dir = new java.io.File(s"$out/png")
-      ImageOps.toPng(spark, spark.read.parquet(s"$out/images$tableSuffix"))
-        .foreachPartition { it: Iterator[ImageOps.PngFrame] =>
-          // executor-side sink: in production this is the S3 upload the
-          // reference does from its uploader process (main.py Uploader)
-          it.foreach { p =>
-            val f = new java.io.File(dir, p.file_name)
-            f.getParentFile.mkdirs()
-            java.nio.file.Files.write(f.toPath, p.png)
+      def imagesBranch(): Unit = {
+        // PII anonymization (reference: select-labelling-imgs anonymize_PII):
+        // with a region table, pixels land in the lake already blurred
+        save(piiRegions match {
+          case Some(regions) => ImageOps.blurFrames(spark, rawImages, regions).drop("n_blurred")
+          case None          => rawImages
+        }, "images")
+        if (writePng) {
+          val dir = new java.io.File(s"$out/png")
+          ImageOps.toPng(spark, landed("images"))
+            .foreachPartition { it: Iterator[ImageOps.PngFrame] =>
+              // executor-side sink: in production this is the S3 upload the
+              // reference does from its uploader process (main.py Uploader)
+              it.foreach { p =>
+                val f = new java.io.File(dir, p.file_name)
+                f.getParentFile.mkdirs()
+                java.nio.file.Files.write(f.toPath, p.png)
+              }
+            }
+        }
+      }
+
+      def odometryBranch(): Unit = {
+        save(RosbagReader.odometryOf(spark, msgs), "odometry")
+        if (trajectory)
+          save(graft.operators.TrajectoryOps.trajectoryStats(landed("odometry")), "trajectory")
+      }
+
+      // the optional stages run one after another in this order, after the
+      // clips table has landed: clipDrift and audioDedup read it, and the
+      // two dedups must not overlap (ImageOps keeps one outstanding dedup
+      // id snapshot per session)
+      def clipsBranch(): Unit = {
+        // microphone topics (audio_common_msgs) land as the clips table —
+        // the audio twin of `images`, consumed unchanged by the
+        // AudioOps spectral/near-dup/segmentation family
+        save(RosbagReader.audioClipsOf(spark, msgs), "clips")
+        // lidar densification control (--voxel=EDGE): PointCloud2 topics land
+        // voxel-downsampled (PointCloudOps.voxelDownsample — one groupBy on
+        // cloud+voxel, DECIMAL-carrier centroids) instead of point-exact —
+        // THE pass a 100 TB lidar lake runs at ingest, since nothing
+        // downstream wants raw beam density. The full-fidelity payload stays
+        // available in the bags; the lake holds the normalized working set.
+        voxel.foreach { edge =>
+          save(graft.operators.PointCloudOps.voxelDownsample(
+            RosbagReader.pointCloudPointsOf(spark, msgs), edge), "lidar_voxel")
+        }
+        // image drift gauge (streaming ingest with a frozen brightness
+        // reference): every batch's per-frame brightness distribution is
+        // PSI-scored against the healthy-recording reference and the bucket
+        // table + rollup land in the versioned <out>/frame_drift SnapshotLake
+        // table (batch-id idempotent — a redelivered batch re-reads as the
+        // same version). A monitor, not a gate: no frame is dropped. Scored
+        // over the RAW frames (a blur region must not read as drift), the
+        // same convention the dedup fingerprints use; capture the reference
+        // from raw frames too (brightnessDriftReference on an un-blurred
+        // recording).
+        frameDrift.foreach { case (ref, batchId) =>
+          SnapshotLake.commitStreamBatch(spark, s"$out/frame_drift",
+            ImageOps.brightnessDrift(spark, rawImages, ref)
+              .withColumn(
+                "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
+            batchId)
+        }
+        // audio drift gauge: the frame gauge's contract on the microphone
+        // column — per-batch PSI of clip RMS against a frozen healthy
+        // reference, landing in the versioned <out>/clip_drift table
+        // (batch-id idempotent); a monitor, not a gate
+        clipDrift.foreach { case (ref, batchId) =>
+          SnapshotLake.commitStreamBatch(spark, s"$out/clip_drift",
+            graft.multimodal.AudioOps.rmsDrift(spark, landed("clips"), ref)
+              .withColumn(
+                "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
+            batchId)
+        }
+        // lidar drift gauge: the same contract on the PointCloud2 column —
+        // per-batch PSI of per-sweep point population against a frozen
+        // healthy reference (PointCloudOps.cloudDriftReference), landing in
+        // the versioned <out>/cloud_drift table (batch-id idempotent); a
+        // monitor, not a gate. Scored over the RAW point stream, before any
+        // --voxel densification (a voxel dial change must not read as a
+        // failing sensor).
+        cloudDrift.foreach { case (ref, batchId) =>
+          SnapshotLake.commitStreamBatch(spark, s"$out/cloud_drift",
+            graft.operators.PointCloudOps.cloudDrift(
+                RosbagReader.pointCloudPointsOf(spark, msgs), ref)
+              .withColumn(
+                "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
+            batchId)
+        }
+        // cross-modal SENSOR-SYNC audit (q111's lake form at ingest): per
+        // (bag, window), the camera frames' alignment against each other
+        // landed modality — clip timestamps and per-sweep cloud timestamps —
+        // as one versioned <out>/sensor_sync table with a `sensor` column
+        // naming the probed arm (batch-id idempotent). A rig with a clock
+        // offset or a dropping sensor shows up here in ITS OWN arriving
+        // batch, before any fusion consumer mis-joins. Camera-only bags
+        // report all-unmatched rows (the audit's loud form of "the second
+        // modality never arrived"), never silence.
+        syncAudit.foreach { case (bucketNs, batchId) =>
+          import org.apache.spark.sql.functions.lit
+          val frames = rawImages.select("bag", "time_ns")
+          def arm(name: String, sensor: DataFrame) =
+            graft.operators.TemporalOps.sensorSyncLakeOf(frames, sensor, bucketNs)
+              .withColumn("sensor", lit(name))
+          SnapshotLake.commitStreamBatch(spark, s"$out/sensor_sync",
+            arm("clips", RosbagReader.audioClipsOf(spark, msgs)
+                .select("bag", "time_ns"))
+              .unionByName(arm("clouds", RosbagReader.pointCloudsOf(spark, msgs)
+                .select("bag", "time_ns")))
+              .withColumn("ingest_batch", lit(batchId)),
+            batchId)
+        }
+        // audio dedup (--audio-dedup[=HAMMING]): the clip twin of the image
+        // manifest below — HK fingerprint + the SHARED banded-Hamming
+        // grouping machinery, landing a canonical-clip manifest next to the
+        // clips table; with a frame index lake, clip fingerprints persist to
+        // <lake>/clip_hashes and identity is CROSS-BATCH (the same
+        // FrameDedupIndex engine, audio key space). Runs off the just-landed
+        // clips parquet so the demux is paid once.
+        audioDedup.foreach { maxHamming =>
+          val clips = landed("clips")
+          frameIndex match {
+            case Some((lake, batchId)) =>
+              FrameDedupIndex.probeAndCommitClips(spark, clips, lake, batchId,
+                maxHamming, sink = m => save(m, "clip_dedup"))
+            case None =>
+              save(ImageOps.totalFrameManifest(
+                clips.select("bag", "topic", "time_ns"),
+                graft.multimodal.AudioOps.dedupGroupsClipsByKey(spark, clips, maxHamming)),
+                "clip_dedup")
           }
         }
-    }
+        // image dedup (--image-dedup[=HAMMING]): the multimodal analogue of
+        // CorpusPrep's text-dedup stages — dHash + banded Hamming join +
+        // connected components (ImageOps.dedupGroupsFrames) over the RAW
+        // frames (blur must not perturb fingerprints), landing a
+        // canonical-frame manifest NEXT TO the images table: one row per
+        // frame with its canonical key + is_canonical, so downstream
+        // consumers (blur, resize, mp4, shard export) join against it and
+        // process each burst of near-identical frames ONCE. A left join back
+        // to the frame index makes the manifest TOTAL (frames with no
+        // near-dup are trivially their own canonical) — consumers filter
+        // is_canonical without a second anti-join against the pair table.
+        imageDedup.foreach { maxHamming =>
+          frameIndex match {
+            case Some((lake, batchId)) =>
+              // streaming ingest with a persisted fingerprint index: the
+              // manifest gains CROSS-BATCH canonical identity — a burst
+              // re-arriving in a later micro-batch collapses onto the landed
+              // canonical (first-claim), exactly as the text side's band
+              // guard. Runs over the RAW frames (blur must not perturb
+              // fingerprints), same as the batch path below.
+              FrameDedupIndex.probeAndCommit(spark, rawImages, lake, batchId,
+                maxHamming, sink = m => save(m, "frame_dedup"))
+            case None =>
+              val groups = ImageOps.dedupGroupsFrames(spark, rawImages, maxHamming)
+              save(ImageOps.totalFrameManifest(
+                rawImages.select("bag", "topic", "time_ns"), groups), "frame_dedup")
+          }
+        }
+      }
+
+      graft.Branches.awaitAll(Seq[() => Unit](
+        () => imagesBranch(),
+        () => odometryBranch(),
+        () => clipsBranch(),
+        () => save(RosbagReader.laserScansOf(spark, msgs), "laser"),
+        () => save(RosbagReader.wrenchOf(spark, msgs), "wrench"),
+        () => save(RosbagReader.stdMsgsOf(spark, msgs), "std_msgs"),
+        // dynamic-schema fallback: every topic with a message_definition lands
+        // as (slot-path -> value) rows even when no hand-coded decoder exists
+        () => save(RosbagReader.genericMessagesOf(spark, msgs), "generic"),
+        // manifest columns are untouched by blur — build it from the RAW frames
+        // so the manifest sink never re-executes the blur pipeline (Catalyst
+        // cannot prune columns through the opaque mapPartitions lambda)
+        () => save(RosbagReader.mp4ManifestOf(rawImages), "manifest")))
+    } finally msgs.unpersist()
   }
 
   /** Option parsing shared with [[BagIngestStream.main]] — the streaming

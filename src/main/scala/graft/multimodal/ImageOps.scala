@@ -546,7 +546,11 @@ object ImageOps {
     val boxes = blurPlan(frames, regions, margin)
       .groupBy("bag", "topic", "time_ns")
       .agg(collect_list(array(col("x1"), col("y1"), col("x2"), col("y2"))).as("__boxes"))
-    val joined = frames.join(boxes, Seq("bag", "topic", "time_ns"), "left")
+    // broadcast: the box list holds at most one small row per frame of the
+    // same input, so it is always far smaller than the pixel side; left to
+    // AQE, the join shuffled the pixels too whenever that side's exchange
+    // finished first
+    val joined = frames.join(broadcast(boxes), Seq("bag", "topic", "time_ns"), "left")
     val cols = joined.columns
     val iW = cols.indexOf("width"); val iH = cols.indexOf("height")
     val iStep = cols.indexOf("step"); val iPx = cols.indexOf("pixels")

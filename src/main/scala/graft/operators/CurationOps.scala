@@ -332,16 +332,7 @@ object CurationOps {
     // are collected per arm and assembled in fixed order, so the output
     // is byte-identical. Job descriptions are thread-local: each arm
     // stays labelled in the UI.
-    def concurrently[A](work: Seq[() => A]): Seq[A] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-      try {
-        import scala.concurrent._
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(Future.sequence(work.map(f => Future(f()))), Duration.Inf)
-      } finally pool.shutdown()
-    }
-    concurrently(Seq(lm, dsir, clf).map(df => () => { df.count(); () }))
+    graft.Branches.awaitAll(Seq(lm, dsir, clf).map(df => () => { df.count(); () }))
 
     def ranks(j: DataFrame, c: String): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
       val schema = StructType(Seq(
@@ -369,7 +360,7 @@ object CurationOps {
         .join(b.select(col("doc_id"), col("score").as("sb")), "doc_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // a failed arm must release ITS caches on the way out — without the
-      // finally, an exception escaping Await.result leaked j/rddA/rddB
+      // finally, an exception escaping the await leaked j/rddA/rddB
       // (MEMORY_AND_DISK) until the caller's clearCache
       var rddA: org.apache.spark.rdd.RDD[_] = null
       var rddB: org.apache.spark.rdd.RDD[_] = null
@@ -399,10 +390,10 @@ object CurationOps {
       }
     }}
     // the scorer caches likewise must not outlive a failed arm: without
-    // the finally an exception out of Await.result left lm/dsir/clf
+    // the finally an exception out of the await left lm/dsir/clf
     // persisted until the caller's clearCache (advisor finding, round 16)
     val arms =
-      try concurrently(armWork)
+      try graft.Branches.awaitAll(armWork)
       finally Seq(lm, dsir, clf).foreach(_.unpersist(blocking = false))
     import s.implicits._
     arms.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))

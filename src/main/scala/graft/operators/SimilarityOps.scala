@@ -607,19 +607,11 @@ object SimilarityOps {
       // fixed arm_no order — the output is byte-identical.
       s.sparkContext.setJobDescription("q107b: brute-force truth")
       exact.count()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(perArm.size)
-      val rows = try {
-        import scala.concurrent._
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(Future.sequence(perArm.map { case (no, name, df) =>
-          Future {
-            // job descriptions are thread-local: each arm stays labelled
-            s.sparkContext.setJobDescription(s"q107b: $name arm")
-            df.collect()(0)
-          }
-        }), Duration.Inf)
-      } finally pool.shutdown()
+      val rows = graft.Branches.awaitAll(perArm.map { case (_, name, df) => () => {
+        // job descriptions are thread-local: each arm stays labelled
+        s.sparkContext.setJobDescription(s"q107b: $name arm")
+        df.collect()(0)
+      }})
       s.createDataFrame(
         java.util.Arrays.asList(rows.sortBy(_.getLong(0)): _*),
         perArm.head._3.schema)

@@ -55,10 +55,11 @@ object RosbagReader {
     withIso(msgs
       .filter(_.msg_def.nonEmpty)
       .mapPartitions { it =>
-        // definition parse cached per datatype within the partition
-        val cache = scala.collection.mutable.Map[String, Map[String, Seq[RosMsgDef.Field]]]()
+        // definition parse cached per (datatype, definition) within the
+        // partition: one datatype may arrive under several definitions
+        val cache = scala.collection.mutable.Map[(String, String), Map[String, Seq[RosMsgDef.Field]]]()
         it.map { m =>
-          val types = cache.getOrElseUpdate(m.datatype + m.msg_def.hashCode,
+          val types = cache.getOrElseUpdate((m.datatype, m.msg_def),
             RosMsgDef.parse(m.datatype, m.msg_def))
           val fields = RosMsgDef.deserialize(m.datatype, types, m.data).toMap
           (m.path, m.topic, m.datatype, m.time_ns, fields)

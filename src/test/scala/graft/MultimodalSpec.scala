@@ -149,6 +149,18 @@ class MultimodalSpec extends SparkSpec {
     assert(rows(1).getAs[Array[Byte]]("pixels").toSeq === Seq[Byte](10, 20, 30, 50, 60, 70))
   }
 
+  test("blurFrames(): the box list joins by broadcast, so the pixels are never shuffled") {
+    // bag frames carry no size estimate, so without the hint the planner
+    // picks a sort-merge join and only AQE may rescue it at run time
+    val frames = RosbagReader.images(spark, bagPath)
+    val regions = spark.createDataFrame(Seq(
+      (bagPath, "/cam0/image_raw", 1600000000L * 1000000000L, 0L, 0L, 1L, 1L)
+    )).toDF("bag", "topic", "time_ns", "region_x", "region_y", "region_w", "region_h")
+    val plan = ImageOps.blurFrames(spark, frames, regions).queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftOuter")), plan)
+    assert(!plan.contains("SortMergeJoin"), plan)
+  }
+
   test("resize(): executes the plan, feeds toPng") {
     val frames = RosbagReader.images(spark, bagPath)
     val out = ImageOps.resize(spark, frames, 1)

@@ -607,6 +607,23 @@ class RosbagSpec extends SparkSpec {
     assert(row.getAs[String]("header.frame_id") === "probe")
   }
 
+  test("genericMessages(): one datatype under two definitions whose hashes " +
+    "collide decodes each message under its own definition") {
+    // "Aa" and "BB" share a String.hashCode, and so do the two definitions
+    assert("int32 Aa".hashCode === "int32 BB".hashCode)
+    def int32(v: Int) = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(v).array()
+    val f = Files.createTempDirectory("genclash").resolve("clash.bag")
+    Files.write(f, BagWriter.bag(BagWriter.bagHeader,
+      BagWriter.connectionWithDef(0, "/old", "custom/Val", "int32 Aa") ++
+        BagWriter.connectionWithDef(1, "/new", "custom/Val", "int32 BB") ++
+        BagWriter.message(0, 1600000000L, 0, int32(7)) ++
+        BagWriter.message(1, 1600000001L, 0, int32(9))))
+    val fields = RosbagReader.genericMessages(spark, f.toString).collect()
+      .map(r => r.getAs[String]("topic") -> r.getMap[String, String](r.fieldIndex("fields")).toMap)
+      .toMap
+    assert(fields === Map("/old" -> Map("Aa" -> "7"), "/new" -> Map("BB" -> "9")))
+  }
+
   test("BagIngestStream: new bags append to the lake exactly once") {
     val watch = Files.createTempDirectory("bagwatch")
     val out = Files.createTempDirectory("baglake").toString
