@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 import graft.GraftSession
 import graft.multimodal.ImageOps
@@ -39,14 +40,30 @@ object BagIngest {
     * `mode` (Overwrite for the batch job; the streaming job overwrites a
     * per-batch subdirectory via `tableSuffix` for idempotent retries).
     *
-    * The demux is cached and materialized once; then the sinks that do not
-    * read each other's output land concurrently ([[graft.Branches]]), one
-    * Spark job stream per branch, since most of them are small single-task
-    * jobs that would otherwise leave the cores idle one after another:
-    * images (then the PNG sink), odometry (then the trajectory rollup),
-    * clips (then the optional stages), and laser, wrench, std_msgs, generic
-    * and manifest on their own. Every branch has ended, and the cache is
+    * The demux is cached once as objects: an RDD of [[RosbagReader.RawMessage]]
+    * persisted MEMORY_AND_DISK, which every sink reads through
+    * `createDataset`, so no columnar cache is built and no sink copies the
+    * bag out of one. The one action that fills the cache is also the type
+    * census: it returns the (datatype, has-definition) kinds the bags hold.
+    * A typed table none of whose kinds is present (images, clips, laser,
+    * odometry, wrench, std_msgs, generic, and the manifest and trajectory
+    * derived from images and odometry) lands empty with the schema its
+    * pipeline would produce, and that pipeline never runs. A present kind
+    * always runs its sink, so integrity failures (e.g. AudioData without
+    * AudioInfo) still fire. The optional stages run whatever the census says.
+    *
+    * Then the sinks that do not read each other's output land concurrently
+    * ([[graft.Branches]]), one Spark job stream per branch, since most of
+    * them are small single-task jobs that would otherwise leave the cores
+    * idle one after another: images (then the manifest and the PNG sink,
+    * both over the landed frames), odometry (then the trajectory rollup),
+    * clips (then the optional stages), and laser, wrench, std_msgs and
+    * generic on their own. Every branch has ended, and the cache is
     * released, before the call returns or rethrows the first failure.
+    *
+    * An ingest needs about 75 generated classes, within Spark's default
+    * codegen cache of 100, so later bags reuse the first bag's classes
+    * instead of compiling them again.
     *
     * `trajectory` also lands the per-recording ego-motion rollup over the
     * odometry table (TrajectoryOps — path/speeds/tortuosity/dwell + the
@@ -70,39 +87,62 @@ object BagIngest {
 
     // parse every bag exactly once: the demuxed message set feeds every
     // output table (the reference also demuxes in a single streaming pass)
-    val msgs = rawMsgs.persist()
+    val demux = rawMsgs.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // materialized before the branches start, so they read the cache
       // instead of each waiting on the same demux task
-      msgs.count()
+      val census = demux
+        .mapPartitions(_.map(m => (m.datatype, m.msg_def.nonEmpty)).toSet.iterator)
+        .collect().toSet
+      def holds(reads: RosbagReader.Reads): Boolean = census.exists(reads.tupled)
+      val msgs = {
+        import spark.implicits._
+        spark.createDataset(demux)
+      }
+      def saveEmpty(view: DataFrame, name: String): Unit =
+        save(spark.createDataFrame(java.util.List.of[Row](), view.schema), name)
+      // true when the view ran; false when the census found none of the
+      // kinds it reads, and it landed empty without running
+      def land(name: String, reads: RosbagReader.Reads)(view: => DataFrame): Boolean =
+        if (holds(reads)) { save(view, name); true }
+        else { saveEmpty(view, name); false }
       val rawImages = RosbagReader.imagesOf(spark, msgs)
 
       def imagesBranch(): Unit = {
         // PII anonymization (reference: select-labelling-imgs anonymize_PII):
         // with a region table, pixels land in the lake already blurred
-        save(piiRegions match {
+        val ran = land("images", RosbagReader.readsImages)(piiRegions match {
           case Some(regions) => ImageOps.blurFrames(spark, rawImages, regions).drop("n_blurred")
           case None          => rawImages
-        }, "images")
-        if (writePng) {
-          val dir = new java.io.File(s"$out/png")
-          ImageOps.toPng(spark, landed("images"))
-            .foreachPartition { it: Iterator[ImageOps.PngFrame] =>
-              // executor-side sink: in production this is the S3 upload the
-              // reference does from its uploader process (main.py Uploader)
-              it.foreach { p =>
-                val f = new java.io.File(dir, p.file_name)
-                f.getParentFile.mkdirs()
-                java.nio.file.Files.write(f.toPath, p.png)
+        })
+        // the manifest's columns are untouched by blur, so it is built from
+        // a column-pruned scan of the landed frames instead of decoding and
+        // numbering them again
+        if (!ran) saveEmpty(RosbagReader.mp4ManifestOf(rawImages), "manifest")
+        else graft.Branches.awaitAll(Seq[() => Unit](
+          () => save(RosbagReader.mp4ManifestOf(landed("images")), "manifest"),
+          () => if (writePng) {
+            val dir = new java.io.File(s"$out/png")
+            ImageOps.toPng(spark, landed("images"))
+              .foreachPartition { it: Iterator[ImageOps.PngFrame] =>
+                // executor-side sink: in production this is the S3 upload the
+                // reference does from its uploader process (main.py Uploader)
+                it.foreach { p =>
+                  val f = new java.io.File(dir, p.file_name)
+                  f.getParentFile.mkdirs()
+                  java.nio.file.Files.write(f.toPath, p.png)
+                }
               }
-            }
-        }
+          }))
       }
 
       def odometryBranch(): Unit = {
-        save(RosbagReader.odometryOf(spark, msgs), "odometry")
-        if (trajectory)
-          save(graft.operators.TrajectoryOps.trajectoryStats(landed("odometry")), "trajectory")
+        val odometry = RosbagReader.odometryOf(spark, msgs)
+        val ran = land("odometry", RosbagReader.readsOdometry)(odometry)
+        if (trajectory) {
+          if (ran) save(graft.operators.TrajectoryOps.trajectoryStats(landed("odometry")), "trajectory")
+          else saveEmpty(graft.operators.TrajectoryOps.trajectoryStats(odometry), "trajectory")
+        }
       }
 
       // the optional stages run one after another in this order, after the
@@ -113,7 +153,7 @@ object BagIngest {
         // microphone topics (audio_common_msgs) land as the clips table —
         // the audio twin of `images`, consumed unchanged by the
         // AudioOps spectral/near-dup/segmentation family
-        save(RosbagReader.audioClipsOf(spark, msgs), "clips")
+        land("clips", RosbagReader.readsAudioData)(RosbagReader.audioClipsOf(spark, msgs))
         // lidar densification control (--voxel=EDGE): PointCloud2 topics land
         // voxel-downsampled (PointCloudOps.voxelDownsample — one groupBy on
         // cloud+voxel, DECIMAL-carrier centroids) instead of point-exact —
@@ -244,17 +284,13 @@ object BagIngest {
         () => imagesBranch(),
         () => odometryBranch(),
         () => clipsBranch(),
-        () => save(RosbagReader.laserScansOf(spark, msgs), "laser"),
-        () => save(RosbagReader.wrenchOf(spark, msgs), "wrench"),
-        () => save(RosbagReader.stdMsgsOf(spark, msgs), "std_msgs"),
+        () => land("laser", RosbagReader.readsLaser)(RosbagReader.laserScansOf(spark, msgs)),
+        () => land("wrench", RosbagReader.readsWrench)(RosbagReader.wrenchOf(spark, msgs)),
+        () => land("std_msgs", RosbagReader.readsStdMsgs)(RosbagReader.stdMsgsOf(spark, msgs)),
         // dynamic-schema fallback: every topic with a message_definition lands
         // as (slot-path -> value) rows even when no hand-coded decoder exists
-        () => save(RosbagReader.genericMessagesOf(spark, msgs), "generic"),
-        // manifest columns are untouched by blur — build it from the RAW frames
-        // so the manifest sink never re-executes the blur pipeline (Catalyst
-        // cannot prune columns through the opaque mapPartitions lambda)
-        () => save(RosbagReader.mp4ManifestOf(rawImages), "manifest")))
-    } finally msgs.unpersist()
+        () => land("generic", RosbagReader.readsGeneric)(RosbagReader.genericMessagesOf(spark, msgs))))
+    } finally demux.unpersist()
   }
 
   /** Option parsing shared with [[BagIngestStream.main]] — the streaming

@@ -314,7 +314,11 @@ object CurationOps {
     // shuffle, and the cache-block lock contention between the two
     // concurrent scorer jobs. The OfFeats seams remain (single-sourced
     // scoring bodies); the scorers featurize independently.
-    val dsir = dsirScores(s, d)
+    // dsirScores over a featurization this query owns, so it is released
+    // with the scorer caches below instead of outliving the call
+    val feats = hashedNgramFeats(Tables.documentsScaled(s, d), 1024)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dsir = dsirScoresOfFeats(feats, "src0", 1024)
       .select(col("doc_id"), col("logweight").as("score"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // scoreOf, not scoreTable: the score frame feeds rank sorts, so the
@@ -324,15 +328,6 @@ object CurationOps {
         ClfWeights.Buckets)
       .select(col("doc_id"), col("logit").as("score"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // Round-16 (guide §2.6): the three scorer materializations and then
-    // the three arms are INDEPENDENT jobs submitted from one driver
-    // thread each — serially, the whole query idled most of local[32]
-    // (and of any cluster) while each arm's rank sorts ran alone; results
-    // are collected per arm and assembled in fixed order, so the output
-    // is byte-identical. Job descriptions are thread-local: each arm
-    // stays labelled in the UI.
-    graft.Branches.awaitAll(Seq(lm, dsir, clf).map(df => () => { df.count(); () }))
 
     def ranks(j: DataFrame, c: String): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
       val schema = StructType(Seq(
@@ -389,12 +384,21 @@ object CurationOps {
         if (rddB != null) rddB.unpersist(blocking = false)
       }
     }}
-    // the scorer caches likewise must not outlive a failed arm: without
-    // the finally an exception out of the await left lm/dsir/clf
-    // persisted until the caller's clearCache (advisor finding, round 16)
+    // The three scorer materializations and then the three arms are
+    // INDEPENDENT jobs submitted from one driver thread each — serially,
+    // the whole query idled most of local[32] (and of any cluster) while
+    // each arm's rank sorts ran alone; results are collected per arm and
+    // assembled in fixed order, so the output is byte-identical. Job
+    // descriptions are thread-local: each arm stays labelled in the UI.
+    // The scorer caches likewise must not outlive a failed scorer job or
+    // arm: materialization and arms share one finally, so an exception out
+    // of either await releases every scorer cache instead of leaving it
+    // persisted until the caller's clearCache.
     val arms =
-      try graft.Branches.awaitAll(armWork)
-      finally Seq(lm, dsir, clf).foreach(_.unpersist(blocking = false))
+      try {
+        graft.Branches.awaitAll(Seq(lm, dsir, clf).map(df => () => { df.count(); () }))
+        graft.Branches.awaitAll(armWork)
+      } finally Seq(lm, dsir, clf, feats).foreach(_.unpersist(blocking = false))
     import s.implicits._
     arms.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
       .toDF("method_a", "method_b", "n_docs", "spearman")

@@ -52,9 +52,6 @@ object TrajectoryOps {
       .withColumn("seg_m", sqrt(col("dx") * col("dx") + col("dy") * col("dy") + col("dz") * col("dz")))
       .withColumn("seg_speed", when(col("dt_s") > 0.0, col("seg_m") / col("dt_s")))
       .withColumn("yaw_rate", when(col("dt_s") > 0.0, abs(col("dyaw")) / col("dt_s")))
-      // endpoints for displacement, resolved in the same window pass
-      .withColumn("first_x", first("pos_x").over(w)).withColumn("first_y", first("pos_y").over(w))
-      .withColumn("first_z", first("pos_z").over(w))
     seg.groupBy("bag", "topic").agg(
       count(lit(1)).as("n_poses"),
       ((max(col("time_ns")) - min(col("time_ns"))).cast("double") / lit(1e9)).as("duration_s"),
@@ -62,15 +59,17 @@ object TrajectoryOps {
       max(col("seg_speed")).as("max_seg_speed"),
       max(col("yaw_rate")).as("max_yaw_rate"),
       sum(when(col("seg_speed") < stopThresh, col("dt_s"))).as("dwell_s"),
-      // displacement from the windowed firsts + the plain lasts (the
-      // last row's pos is max_by over the same (time_ns) order)
+      // displacement between the endpoint poses, taken in the window's
+      // (time_ns, seq) order by the rollup itself, so the lags above are
+      // the only window pass
+      min_by(struct(col("pos_x"), col("pos_y"), col("pos_z")),
+        struct(col("time_ns"), col("seq"))).as("first"),
       max_by(struct(col("pos_x"), col("pos_y"), col("pos_z")),
-        struct(col("time_ns"), col("seq"))).as("last"),
-      first(col("first_x")).as("fx"), first(col("first_y")).as("fy"), first(col("first_z")).as("fz"))
+        struct(col("time_ns"), col("seq"))).as("last"))
       .withColumn("displacement_m", sqrt(
-        (col("last.pos_x") - col("fx")) * (col("last.pos_x") - col("fx")) +
-        (col("last.pos_y") - col("fy")) * (col("last.pos_y") - col("fy")) +
-        (col("last.pos_z") - col("fz")) * (col("last.pos_z") - col("fz"))))
+        (col("last.pos_x") - col("first.pos_x")) * (col("last.pos_x") - col("first.pos_x")) +
+        (col("last.pos_y") - col("first.pos_y")) * (col("last.pos_y") - col("first.pos_y")) +
+        (col("last.pos_z") - col("first.pos_z")) * (col("last.pos_z") - col("first.pos_z"))))
       .withColumn("tortuosity",
         when(col("displacement_m") > 0.0, col("path_m") / col("displacement_m")))
       .withColumn("mean_speed",

@@ -22,6 +22,28 @@ object RosbagReader {
   final case class RawMessage(path: String, topic: String, datatype: String, time_ns: Long,
       data: Array[Byte], msg_def: String)
 
+  /** Which messages a typed view reads, by datatype and by whether the
+    * message's connection carries a message_definition. The views filter
+    * with it, and the ingest's type census asks it whether a bag holds
+    * anything a view would read. */
+  private[graft] type Reads = (String, Boolean) => Boolean
+
+  private[graft] val readsImages: Reads = (t, _) => t == "sensor_msgs/Image" || t == "sensor_msgs/CompressedImage"
+  private[graft] val readsLaser: Reads = (t, _) => t == "sensor_msgs/LaserScan"
+  private[graft] val readsAudioData: Reads = (t, _) =>
+    t == "audio_common_msgs/AudioData" || t == "audio_common_msgs/AudioDataStamped"
+  private[graft] val readsOdometry: Reads = (t, _) => t == "nav_msgs/Odometry"
+  private[graft] val readsWrench: Reads = (t, _) => t == "geometry_msgs/Wrench"
+  // hand-coded decoders for the common types; other std_msgs flow through
+  // the dynamic genericMessages path when they carry a message_definition,
+  // and land in std_msgs with a NULL value (honest "undecodable") when they
+  // don't
+  private[graft] val readsStdMsgs: Reads = (t, hasDef) => t.startsWith("std_msgs/") &&
+    (t == "std_msgs/String" || t == "std_msgs/Int32" || t == "std_msgs/Float64" || !hasDef)
+  private[graft] val readsGeneric: Reads = (_, hasDef) => hasDef
+
+  private def reading(r: Reads): RawMessage => Boolean = m => r(m.datatype, m.msg_def.nonEmpty)
+
   /** All messages of all bags under `path`, demuxed — streaming: each task
     * opens its bag as a stream (PortableDataStream) and the parser holds at
     * most one chunk + one message in memory, so multi-GB bags neither hit
@@ -53,7 +75,7 @@ object RosbagReader {
   def genericMessagesOf(spark: SparkSession, msgs: Dataset[RawMessage]): DataFrame = {
     import spark.implicits._
     withIso(msgs
-      .filter(_.msg_def.nonEmpty)
+      .filter(reading(readsGeneric))
       .mapPartitions { it =>
         // definition parse cached per (datatype, definition) within the
         // partition: one datatype may arrive under several definitions
@@ -104,8 +126,7 @@ object RosbagReader {
   def imagesOf(spark: SparkSession, msgs: Dataset[RawMessage]): DataFrame = {
     import spark.implicits._
     val rows = msgs
-      .filter(m => m.datatype == "sensor_msgs/Image" ||
-        m.datatype == "sensor_msgs/CompressedImage")
+      .filter(reading(readsImages))
       .map { m =>
         if (m.datatype == "sensor_msgs/Image") {
           val img = RosMessages.image(m.data)
@@ -141,7 +162,7 @@ object RosbagReader {
   def laserScansOf(spark: SparkSession, msgs: Dataset[RawMessage]): DataFrame = {
     import spark.implicits._
     withIso(msgs
-      .filter(_.datatype == "sensor_msgs/LaserScan")
+      .filter(reading(readsLaser))
       .map { m =>
         val l = RosMessages.laserScan(m.data)
         (m.path, m.topic, m.time_ns, l.header.seq, l.header.frameId, l.angleMin, l.angleMax,
@@ -305,8 +326,7 @@ object RosbagReader {
     val nsOf = (topic: org.apache.spark.sql.Column) =>
       regexp_extract(topic, "^(.*)/[^/]+$", 1)
     val data = msgs
-      .filter(m => m.datatype == "audio_common_msgs/AudioData" ||
-        m.datatype == "audio_common_msgs/AudioDataStamped")
+      .filter(reading(readsAudioData))
       .map { m =>
         val pcm =
           if (m.datatype == "audio_common_msgs/AudioData") RosMessages.audioData(m.data)
@@ -376,7 +396,7 @@ object RosbagReader {
   def odometryOf(spark: SparkSession, msgs: Dataset[RawMessage]): DataFrame = {
     import spark.implicits._
     withIso(msgs
-      .filter(_.datatype == "nav_msgs/Odometry")
+      .filter(reading(readsOdometry))
       .map { m =>
         val o = RosMessages.odometry(m.data)
         (m.path, m.topic, m.time_ns, o.header.seq, o.header.frameId, o.childFrameId,
@@ -395,7 +415,7 @@ object RosbagReader {
   def wrenchOf(spark: SparkSession, msgs: Dataset[RawMessage]): DataFrame = {
     import spark.implicits._
     withIso(msgs
-      .filter(_.datatype == "geometry_msgs/Wrench")
+      .filter(reading(readsWrench))
       .map { m =>
         val v = RosMessages.wrench(m.data)
         (m.path, m.topic, m.time_ns, v.forceX, v.forceY, v.forceZ, v.torqueX, v.torqueY, v.torqueZ)
@@ -411,13 +431,8 @@ object RosbagReader {
 
   def stdMsgsOf(spark: SparkSession, msgs: Dataset[RawMessage]): DataFrame = {
     import spark.implicits._
-    // hand-coded decoders for the common types; other std_msgs flow through
-    // the dynamic genericMessages path when they carry a message_definition,
-    // and land here with a NULL value (honest "undecodable") when they don't
     withIso(msgs
-      .filter(m => m.datatype.startsWith("std_msgs/") &&
-        (m.datatype == "std_msgs/String" || m.datatype == "std_msgs/Int32" ||
-          m.datatype == "std_msgs/Float64" || m.msg_def.isEmpty))
+      .filter(reading(readsStdMsgs))
       .map { m =>
         val v: Option[String] = m.datatype match {
           case "std_msgs/String"  => Some(RosMessages.stdString(m.data))

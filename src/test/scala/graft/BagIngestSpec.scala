@@ -1,10 +1,140 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.GraftTestAccess
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+
+import graft.jobs.BagIngest
+import graft.sources.rosbag.RosbagReader
 
 class BagIngestSpec extends SparkSpec {
+
+  private val T0 = 1600000000L
+
+  /** Bag records for the message kinds of the benchmark corpus: an rgb8 and
+    * a bgr8 camera (three 4x3 frames each), odometry, a LaserScan, a wrench,
+    * std_msgs/String and one custom type with its message_definition;
+    * `audio` adds a microphone namespace (AudioInfo beside AudioData). */
+  private def records(cameras: Boolean, rest: Boolean, audio: Boolean): Array[Byte] = {
+    def le(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+    val cams = if (!cameras) Array.emptyByteArray else
+      BagWriter.connection(0, "/cam_front/image_raw", "sensor_msgs/Image") ++
+        BagWriter.connection(1, "/cam_rear/image_raw", "sensor_msgs/Image") ++
+        (0 until 3).flatMap { f =>
+          Seq(0 -> "rgb8", 1 -> "bgr8").flatMap { case (c, enc) =>
+            val px = Array.tabulate[Byte](4 * 3 * 3)(i => (i * 7 + f * 31 + c * 13).toByte)
+            BagWriter.message(c, T0 + f, c * 1000, BagWriter.imagePayload(f, 4, 3, enc, px))
+          }
+        }.toArray
+    val others = if (!rest) Array.emptyByteArray else
+      BagWriter.connection(2, "/odom", "nav_msgs/Odometry") ++
+        BagWriter.connection(3, "/scan", "sensor_msgs/LaserScan") ++
+        BagWriter.connection(4, "/wrist/wrench", "geometry_msgs/Wrench") ++
+        BagWriter.connection(5, "/operator/notes", "std_msgs/String") ++
+        BagWriter.connectionWithDef(6, "/vehicle/status", "test_msgs/Status",
+          "int32 gear\nfloat64 speed_mps\n") ++
+        (0 until 3).flatMap { i =>
+          BagWriter.message(2, T0 + i, 500, BagWriter.odometryPayload(i * 2.0, 1.0)) ++
+            BagWriter.message(3, T0 + i, 600, BagWriter.laserPayload()) ++
+            BagWriter.message(4, T0 + i, 700, BagWriter.wrenchPayload()) ++
+            BagWriter.message(5, T0 + i, 800, BagWriter.stdStringPayload(s"note $i")) ++
+            BagWriter.message(6, T0 + i, 900, le(12).putInt(i + 1).putDouble(i * 1.5).array())
+        }.toArray
+    val mic = if (!audio) Array.emptyByteArray else
+      BagWriter.connection(7, "/mic/audio_info", "audio_common_msgs/AudioInfo") ++
+        BagWriter.connection(8, "/mic/audio", "audio_common_msgs/AudioData") ++
+        BagWriter.message(7, T0, 0, BagWriter.audioInfoPayload(1, 16000)) ++
+        BagWriter.message(8, T0, 100, BagWriter.audioDataPayload(new Array[Byte](64)))
+    cams ++ others ++ mic
+  }
+
+  private def writeBag(dir: Path, name: String, cameras: Boolean = true, rest: Boolean = true,
+      audio: Boolean = false): String = {
+    val f = dir.resolve(name)
+    Files.write(f, BagWriter.bag(BagWriter.bagHeader,
+      BagWriter.chunk(records(cameras, rest, audio), bz2 = false)))
+    f.toString
+  }
+
+  /** One blur region on the first frame of each camera, keyed by the bag
+    * path as the demux reports it. */
+  private def regionsOf(bag: String): DataFrame = {
+    import spark.implicits._
+    val key = RosbagReader.messages(spark, bag).first().path
+    Seq((key, "/cam_front/image_raw", T0 * 1000000000L, 0L, 0L, 2L, 2L),
+      (key, "/cam_rear/image_raw", T0 * 1000000000L + 1000L, 1L, 1L, 2L, 1L))
+      .toDF("bag", "topic", "time_ns", "region_x", "region_y", "region_w", "region_h")
+  }
+
+  test("a table whose message kinds a bag lacks lands empty, with the schema " +
+    "its decoder gives a bag that holds them") {
+    val dir = Files.createTempDirectory("graftcensus")
+    def ingest(name: String, bag: String): String = {
+      val out = dir.resolve(name).toString
+      BagIngest.run(spark, bag, out, writePng = false)
+      out
+    }
+    val full = ingest("full", writeBag(dir, "full.bag", audio = true))
+    val camsOnly = ingest("cams", writeBag(dir, "cams.bag", rest = false))
+    val noCams = ingest("nocams", writeBag(dir, "nocams.bag", cameras = false))
+    val absent = Seq(
+      camsOnly -> Seq("clips", "laser", "odometry", "wrench", "std_msgs", "generic", "trajectory"),
+      noCams -> Seq("images", "manifest", "clips"))
+    absent.foreach { case (out, tables) =>
+      tables.foreach { t =>
+        val skipped = spark.read.parquet(s"$out/$t")
+        val held = spark.read.parquet(s"$full/$t")
+        assert(skipped.count() === 0, s"$out/$t")
+        assert(held.count() > 0, s"$full/$t")
+        assert(skipped.schema === held.schema, s"$out/$t")
+      }
+    }
+    // the kinds each bag does hold land in full
+    assert(spark.read.parquet(s"$camsOnly/images").count() === 6)
+    assert(spark.read.parquet(s"$camsOnly/manifest").count() === 6)
+    assert(spark.read.parquet(s"$noCams/odometry").count() === 3)
+    assert(spark.read.parquet(s"$noCams/generic").count() === 3)
+  }
+
+  test("the manifest built from the landed, blurred frames equals the manifest " +
+    "of the raw frames row for row") {
+    val dir = Files.createTempDirectory("graftmanifest")
+    val bag = writeBag(dir, "a.bag")
+    val out = dir.resolve("lake").toString
+    val regions = regionsOf(bag)
+    BagIngest.run(spark, bag, out, writePng = false, piiRegions = Some(regions))
+    val raw = RosbagReader.imagesOf(spark, RosbagReader.messages(spark, bag))
+    val expected = RosbagReader.mp4ManifestOf(raw)
+    val landed = spark.read.parquet(s"$out/manifest")
+    assert(landed.columns.toSeq === expected.columns.toSeq)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq)
+      .sortBy(r => (r(0).toString, r(1).toString, r(2).asInstanceOf[Int])).toSeq
+    assert(rows(landed) === rows(expected))
+    // the regions did blur the landed frames the manifest was built from
+    def pixels(df: DataFrame) = df.select("topic", "time_ns", "pixels").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Array[Byte]](2).toSeq).toMap
+    val (landedPx, rawPx) = (pixels(spark.read.parquet(s"$out/images")), pixels(raw))
+    assert(landedPx.keySet === rawPx.keySet)
+    assert(landedPx.count { case (k, v) => v != rawPx(k) } === 2)
+  }
+
+  test("a second ingest of a benchmark-shaped bag compiles no generated class") {
+    val dir = Files.createTempDirectory("graftcodegen")
+    val bag = writeBag(dir, "a.bag")
+    val regions = regionsOf(bag)
+    def ingest(name: String): Unit = BagIngest.run(spark, bag, dir.resolve(name).toString,
+      writePng = true, piiRegions = Some(regions))
+    ingest("first")
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    ingest("second")
+    // every class the first ingest generated is still in Spark's codegen
+    // cache: one ingest's classes fit it, so a stream of bags stops
+    // compiling after the first
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0)
+  }
 
   test("a failed ingest rethrows the branch's failure, with no job left running " +
     "and the demux cache released") {

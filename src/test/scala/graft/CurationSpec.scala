@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftSqlTestAccess
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -206,6 +207,27 @@ class CurationSpec extends SparkSpec {
     val again = CurationOps.qualityAgreement(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(again === byPair)
+  }
+
+  test("q98: a scorer job that fails at run time leaves no cache behind") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    import java.nio.file.Files
+    // a lake whose documents footer (schema, row groups) is intact, so the
+    // query plans, but whose pages are zeroed, so every scan task throws
+    val lake = Files.createTempDirectory("graftq98fail")
+    val docs = lake.resolve("documents.parquet")
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(s"$sf/documents.parquet"))
+    val footerLen = ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footerLen, 0.toByte)
+    Files.write(docs, bytes)
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val plansBefore = GraftSqlTestAccess.cachedPlans(spark)
+    intercept[Exception](CurationOps.qualityAgreement(spark, lake.toString))
+    assert(sc.getPersistentRDDs.keySet === rddsBefore, "a scorer cache outlived the failed query")
+    assert(GraftSqlTestAccess.cachedPlans(spark) === plansBefore,
+      "a scorer frame is still registered as cached")
   }
 
   test("q99 repetition profile: exact recompute, bounds, coverage semantics") {

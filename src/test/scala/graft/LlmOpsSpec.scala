@@ -908,8 +908,8 @@ class LlmOpsSpec extends SparkSpec {
     import spark.implicits._
     // obviously-correct driver-side reference (Sennrich et al. 2016's
     // algorithm verbatim): count adjacent pairs, promote the max with
-    // (count DESC, left ASC, right ASC) ties, fuse left-to-right
-    // non-overlapping, repeat
+    // (count DESC, left ASC, right ASC) ties under the trainer's UTF-8
+    // byte order, fuse left-to-right non-overlapping, repeat
     def refMergeWord(w: Vector[String], l: String, r: String): Vector[String] =
       w.foldLeft(Vector.empty[String]) { (acc, x) =>
         if (acc.nonEmpty && acc.last == l && x == r) acc.init :+ (l + r)
@@ -922,7 +922,11 @@ class LlmOpsSpec extends SparkSpec {
       while (continue && out.length < rounds) {
         val counts = scala.collection.mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
         syms.foreach(w => w.zip(w.drop(1)).foreach(p => counts(p) += 1))
-        val best = counts.toSeq.sortBy { case ((l, r), n) => (-n, l, r) }.headOption
+        val best = counts.toSeq.sortWith { case (((l1, r1), n1), ((l2, r2), n2)) =>
+          if (n1 != n2) n1 > n2
+          else if (l1 != l2) operators.Bpe.utf8Lt(l1, l2)
+          else operators.Bpe.utf8Lt(r1, r2)
+        }.headOption
         best match {
           case Some(((l, r), n)) if n >= minCount =>
             out += ((l, r, n))
