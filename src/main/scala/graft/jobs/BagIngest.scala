@@ -1,10 +1,13 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
 
 import graft.GraftSession
 import graft.multimodal.ImageOps
+import graft.operators.TextAnalysisOps.DriftRef
 import graft.sources.rosbag.RosbagReader
 
 /** The reference pipeline's end-to-end job as one Spark application: ROS
@@ -14,7 +17,7 @@ import graft.sources.rosbag.RosbagReader
   *
   * Usage: BagIngest <bag-path-or-glob> <out-dir> [--png]
   *          [--blur-regions <parquet>] [--image-dedup[=HAMMING]]
-  *          [--voxel=EDGE_METERS]
+  *          [--audio-dedup[=HAMMING]] [--voxel=EDGE_METERS]
   *
   * Output layout:
   *   <out>/images/      frame metadata + pixel payloads (parquet)
@@ -24,21 +27,44 @@ import graft.sources.rosbag.RosbagReader
   *   <out>/manifest/    per-recording mp4/frame manifest
   *   <out>/trajectory/  per-recording ego-motion rollup of odometry
   *   <out>/frame_dedup/ canonical-frame manifest (with --image-dedup)
+  *   <out>/clip_dedup/  canonical-clip manifest (with --audio-dedup)
   *   <out>/lidar_voxel/ voxel-downsampled PointCloud2 points (with --voxel)
   *   <out>/png/         one real PNG file per frame (with --png)
   */
 object BagIngest {
 
-  def run(spark: SparkSession, bags: String, out: String, writePng: Boolean,
-      piiRegions: Option[DataFrame] = None, imageDedup: Option[Int] = None,
-      voxel: Option[Double] = None, audioDedup: Option[Int] = None): Unit =
-    writeTablesOf(spark, RosbagReader.messages(spark, bags), out, SaveMode.Overwrite, writePng,
-      piiRegions, imageDedup = imageDedup, voxel = voxel, audioDedup = audioDedup,
-      trajectory = true)
+  /** The optional stages both CLIs take: the near-duplicate frame and clip
+    * manifests (`frame_dedup/`, `clip_dedup/`, each at a max Hamming
+    * distance) and the voxel-downsampled lidar table (`lidar_voxel/`, at an
+    * edge length in meters). */
+  final case class Stages(imageDedup: Option[Int] = None, audioDedup: Option[Int] = None,
+      voxel: Option[Double] = None)
 
-  /** One demux pass over `rawMsgs` -> all the lake tables written with
-    * `mode` (Overwrite for the batch job; the streaming job overwrites a
-    * per-batch subdirectory via `tableSuffix` for idempotent retries).
+  /** The inputs only a streaming ingest has, since each needs a batch id:
+    *   - `frameIndex`, the lake where the dedup fingerprints persist, which
+    *     makes `frame_dedup/` and `clip_dedup/` cross-batch;
+    *   - the PSI drift gauges (monitors, not gates) against a frozen healthy
+    *     reference, per modality: frame brightness
+    *     (ImageOps.brightnessDriftReference, `frame_drift/`), clip RMS
+    *     (AudioOps.rmsDriftReference, `clip_drift/`) and per-sweep point
+    *     population (PointCloudOps.cloudDriftReference, `cloud_drift/`);
+    *   - the sensor-sync audit's window in ns (`sensor_sync/`). */
+  final case class StreamInputs(frameIndex: Option[String] = None,
+      frameDrift: Option[DriftRef] = None, clipDrift: Option[DriftRef] = None,
+      cloudDrift: Option[DriftRef] = None, syncAuditBucketNs: Option[Long] = None)
+
+  /** One streaming micro-batch. Its id names the `batch=<id>` directory
+    * every table lands in and versions every monitor commit. */
+  final case class StreamBatch(id: Long, inputs: StreamInputs = StreamInputs())
+
+  def run(spark: SparkSession, bags: String, out: String, writePng: Boolean,
+      piiRegions: Option[DataFrame] = None, stages: Stages = Stages()): Unit =
+    writeTablesOf(spark, RosbagReader.messages(spark, bags), out, writePng, piiRegions, stages)
+
+  /** One demux pass over `rawMsgs` -> all the lake tables, each overwritten.
+    * The batch job (`batch` empty) lands them at `<out>/<table>`; a stream
+    * batch lands them at `<out>/<table>/batch=<id>`, so a retried batch
+    * rewrites its own directory (idempotent).
     *
     * The demux is cached once as objects: an RDD of [[RosbagReader.RawMessage]]
     * persisted MEMORY_AND_DISK, which every sink reads through
@@ -61,29 +87,40 @@ object BagIngest {
     * generic on their own. Every branch has ended, and the cache is
     * released, before the call returns or rethrows the first failure.
     *
+    * The PNG sink writes into a staging directory that replaces `<out>/png`
+    * only once every branch has succeeded, so a re-ingest leaves none of
+    * the previous bag's frames behind, and a failed one leaves the old
+    * frames and no staging directory.
+    *
     * An ingest needs about 75 generated classes, within Spark's default
     * codegen cache of 100, so later bags reuse the first bag's classes
     * instead of compiling them again.
     *
-    * `trajectory` also lands the per-recording ego-motion rollup over the
+    * The batch job also lands the per-recording ego-motion rollup over the
     * odometry table (TrajectoryOps — path/speeds/tortuosity/dwell + the
-    * pose-jump and frozen-localizer tripwires). BATCH ONLY by design: the
-    * statistics are per whole recording, and a streaming micro-batch holds
-    * partial recordings — the streaming job's consumers run the rollup over
-    * the compacted odometry table instead.
+    * pose-jump and frozen-localizer tripwires). A stream batch does not, by
+    * design: the statistics are per whole recording, and a micro-batch
+    * holds partial recordings — the streaming job's consumers run the
+    * rollup over the compacted odometry table instead.
     */
-  def writeTablesOf(spark: SparkSession, rawMsgs: org.apache.spark.sql.Dataset[RosbagReader.RawMessage],
-      out: String, mode: SaveMode, writePng: Boolean, piiRegions: Option[DataFrame],
-      tableSuffix: String = "", imageDedup: Option[Int] = None,
-      voxel: Option[Double] = None, audioDedup: Option[Int] = None,
-      frameIndex: Option[(String, Long)] = None,
-      frameDrift: Option[(graft.operators.TextAnalysisOps.DriftRef, Long)] = None,
-      clipDrift: Option[(graft.operators.TextAnalysisOps.DriftRef, Long)] = None,
-      cloudDrift: Option[(graft.operators.TextAnalysisOps.DriftRef, Long)] = None,
-      syncAudit: Option[(Long, Long)] = None, trajectory: Boolean = false): Unit = {
+  def writeTablesOf(spark: SparkSession, rawMsgs: Dataset[RosbagReader.RawMessage],
+      out: String, writePng: Boolean, piiRegions: Option[DataFrame],
+      stages: Stages = Stages(), batch: Option[StreamBatch] = None): Unit = {
+    val suffix = batch.fold("")(b => s"/batch=${b.id}")
     def save(df: DataFrame, name: String): Unit =
-      df.write.mode(mode).parquet(s"$out/$name$tableSuffix")
-    def landed(name: String): DataFrame = spark.read.parquet(s"$out/$name$tableSuffix")
+      df.write.mode(SaveMode.Overwrite).parquet(s"$out/$name$suffix")
+    def landed(name: String): DataFrame = spark.read.parquet(s"$out/$name$suffix")
+    // a monitor's rows, tagged with the batch id, as that batch's version
+    // of its SnapshotLake table (a redelivered batch re-reads as the same
+    // version)
+    def commit(b: StreamBatch, table: String, rows: DataFrame): Unit =
+      SnapshotLake.commitStreamBatch(spark, s"$out/$table",
+        rows.withColumn("ingest_batch", lit(b.id)), b.id)
+    val frameIndex = for (b <- batch; lake <- b.inputs.frameIndex) yield (lake, b.id)
+
+    val (png, pngStaging) = (new Path(s"$out/png"), new Path(s"$out/png.staging"))
+    val fs = png.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (writePng) { fs.delete(pngStaging, true); fs.mkdirs(pngStaging) }
 
     // parse every bag exactly once: the demuxed message set feeds every
     // output table (the reference also demuxes in a single streaming pass)
@@ -122,7 +159,7 @@ object BagIngest {
         else graft.Branches.awaitAll(Seq[() => Unit](
           () => save(RosbagReader.mp4ManifestOf(landed("images")), "manifest"),
           () => if (writePng) {
-            val dir = new java.io.File(s"$out/png")
+            val dir = new java.io.File(pngStaging.toString)
             ImageOps.toPng(spark, landed("images"))
               .foreachPartition { it: Iterator[ImageOps.PngFrame] =>
                 // executor-side sink: in production this is the S3 upload the
@@ -139,7 +176,7 @@ object BagIngest {
       def odometryBranch(): Unit = {
         val odometry = RosbagReader.odometryOf(spark, msgs)
         val ran = land("odometry", RosbagReader.readsOdometry)(odometry)
-        if (trajectory) {
+        if (batch.isEmpty) {
           if (ran) save(graft.operators.TrajectoryOps.trajectoryStats(landed("odometry")), "trajectory")
           else saveEmpty(graft.operators.TrajectoryOps.trajectoryStats(odometry), "trajectory")
         }
@@ -160,7 +197,7 @@ object BagIngest {
         // THE pass a 100 TB lidar lake runs at ingest, since nothing
         // downstream wants raw beam density. The full-fidelity payload stays
         // available in the bags; the lake holds the normalized working set.
-        voxel.foreach { edge =>
+        stages.voxel.foreach { edge =>
           save(graft.operators.PointCloudOps.voxelDownsample(
             RosbagReader.pointCloudPointsOf(spark, msgs), edge), "lidar_voxel")
         }
@@ -174,24 +211,14 @@ object BagIngest {
         // same convention the dedup fingerprints use; capture the reference
         // from raw frames too (brightnessDriftReference on an un-blurred
         // recording).
-        frameDrift.foreach { case (ref, batchId) =>
-          SnapshotLake.commitStreamBatch(spark, s"$out/frame_drift",
-            ImageOps.brightnessDrift(spark, rawImages, ref)
-              .withColumn(
-                "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
-            batchId)
-        }
+        for (b <- batch; ref <- b.inputs.frameDrift)
+          commit(b, "frame_drift", ImageOps.brightnessDrift(spark, rawImages, ref))
         // audio drift gauge: the frame gauge's contract on the microphone
         // column — per-batch PSI of clip RMS against a frozen healthy
         // reference, landing in the versioned <out>/clip_drift table
         // (batch-id idempotent); a monitor, not a gate
-        clipDrift.foreach { case (ref, batchId) =>
-          SnapshotLake.commitStreamBatch(spark, s"$out/clip_drift",
-            graft.multimodal.AudioOps.rmsDrift(spark, landed("clips"), ref)
-              .withColumn(
-                "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
-            batchId)
-        }
+        for (b <- batch; ref <- b.inputs.clipDrift)
+          commit(b, "clip_drift", graft.multimodal.AudioOps.rmsDrift(spark, landed("clips"), ref))
         // lidar drift gauge: the same contract on the PointCloud2 column —
         // per-batch PSI of per-sweep point population against a frozen
         // healthy reference (PointCloudOps.cloudDriftReference), landing in
@@ -199,14 +226,9 @@ object BagIngest {
         // monitor, not a gate. Scored over the RAW point stream, before any
         // --voxel densification (a voxel dial change must not read as a
         // failing sensor).
-        cloudDrift.foreach { case (ref, batchId) =>
-          SnapshotLake.commitStreamBatch(spark, s"$out/cloud_drift",
-            graft.operators.PointCloudOps.cloudDrift(
-                RosbagReader.pointCloudPointsOf(spark, msgs), ref)
-              .withColumn(
-                "ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
-            batchId)
-        }
+        for (b <- batch; ref <- b.inputs.cloudDrift)
+          commit(b, "cloud_drift", graft.operators.PointCloudOps.cloudDrift(
+            RosbagReader.pointCloudPointsOf(spark, msgs), ref))
         // cross-modal SENSOR-SYNC audit (q111's lake form at ingest): per
         // (bag, window), the camera frames' alignment against each other
         // landed modality — clip timestamps and per-sweep cloud timestamps —
@@ -216,19 +238,15 @@ object BagIngest {
         // batch, before any fusion consumer mis-joins. Camera-only bags
         // report all-unmatched rows (the audit's loud form of "the second
         // modality never arrived"), never silence.
-        syncAudit.foreach { case (bucketNs, batchId) =>
-          import org.apache.spark.sql.functions.lit
+        for (b <- batch; bucketNs <- b.inputs.syncAuditBucketNs) {
           val frames = rawImages.select("bag", "time_ns")
           def arm(name: String, sensor: DataFrame) =
             graft.operators.TemporalOps.sensorSyncLakeOf(frames, sensor, bucketNs)
               .withColumn("sensor", lit(name))
-          SnapshotLake.commitStreamBatch(spark, s"$out/sensor_sync",
-            arm("clips", RosbagReader.audioClipsOf(spark, msgs)
-                .select("bag", "time_ns"))
-              .unionByName(arm("clouds", RosbagReader.pointCloudsOf(spark, msgs)
-                .select("bag", "time_ns")))
-              .withColumn("ingest_batch", lit(batchId)),
-            batchId)
+          commit(b, "sensor_sync",
+            arm("clips", RosbagReader.audioClipsOf(spark, msgs).select("bag", "time_ns"))
+              .unionByName(arm("clouds",
+                RosbagReader.pointCloudsOf(spark, msgs).select("bag", "time_ns"))))
         }
         // audio dedup (--audio-dedup[=HAMMING]): the clip twin of the image
         // manifest below — HK fingerprint + the SHARED banded-Hamming
@@ -237,7 +255,7 @@ object BagIngest {
         // <lake>/clip_hashes and identity is CROSS-BATCH (the same
         // FrameDedupIndex engine, audio key space). Runs off the just-landed
         // clips parquet so the demux is paid once.
-        audioDedup.foreach { maxHamming =>
+        stages.audioDedup.foreach { maxHamming =>
           val clips = landed("clips")
           frameIndex match {
             case Some((lake, batchId)) =>
@@ -261,7 +279,7 @@ object BagIngest {
         // to the frame index makes the manifest TOTAL (frames with no
         // near-dup are trivially their own canonical) — consumers filter
         // is_canonical without a second anti-join against the pair table.
-        imageDedup.foreach { maxHamming =>
+        stages.imageDedup.foreach { maxHamming =>
           frameIndex match {
             case Some((lake, batchId)) =>
               // streaming ingest with a persisted fingerprint index: the
@@ -290,47 +308,79 @@ object BagIngest {
         // dynamic-schema fallback: every topic with a message_definition lands
         // as (slot-path -> value) rows even when no hand-coded decoder exists
         () => land("generic", RosbagReader.readsGeneric)(RosbagReader.genericMessagesOf(spark, msgs))))
-    } finally demux.unpersist()
+      if (writePng) {
+        fs.delete(png, true)
+        require(fs.rename(pngStaging, png), s"could not move $pngStaging to $png")
+      }
+    } finally {
+      demux.unpersist()
+      if (writePng) fs.delete(pngStaging, true)
+    }
   }
 
-  /** Option parsing shared with [[BagIngestStream.main]] — the streaming
-    * job threads the SAME optional stages, so the flag grammar must not
-    * drift between the two CLIs. A bare `--voxel` (no =EDGE) fails
-    * loudly: there is no sensible default edge length, and a silently
-    * ignored flag would run the whole ingest without the table the
-    * operator asked for. */
-  private[jobs] def parseStageFlags(args: Array[String]): (Option[Int], Option[Int], Option[Double]) = {
-    require(!args.contains("--voxel"),
-      "--voxel requires an edge length: --voxel=EDGE_METERS")
-    val dedup = args.collectFirst {
-      case "--image-dedup"                     => 3
-      case a if a.startsWith("--image-dedup=") => a.stripPrefix("--image-dedup=").toInt
+  /** A command line of either CLI: its positional paths, the stages, and
+    * the flags only one CLI takes (`--png` and `--blur-regions` the batch
+    * job's, `--frame-index` the streaming job's). */
+  private[jobs] final case class Args(paths: Seq[String], stages: Stages, png: Boolean,
+      blurRegions: Option[String], frameIndex: Option[String])
+
+  private val BatchUsage = "usage: BagIngest <bags> <out-dir> [--png] [--blur-regions <parquet>] " +
+    "[--image-dedup[=HAMMING]] [--audio-dedup[=HAMMING]] [--voxel=EDGE_METERS]"
+  private val StreamUsage = "usage: BagIngestStream <watch-dir> <out-dir> <checkpoint-dir> " +
+    "[--image-dedup[=HAMMING]] [--audio-dedup[=HAMMING]] [--voxel=EDGE_METERS] " +
+    "[--frame-index=LAKE_DIR]"
+
+  /** The one flag grammar of both CLIs, so the stages they share cannot
+    * drift between them. The positional paths come first (two, or three
+    * for the streaming job), and every later argument must be a flag that
+    * CLI takes. Anything else fails before Spark starts: an unknown or
+    * misspelt flag, the other CLI's flag, or a bare `--voxel` (there is no
+    * sensible default edge length) would otherwise run the whole ingest
+    * without the stage, index or blur the operator asked for. */
+  private[jobs] def parseArgs(args: Seq[String], stream: Boolean): Args = {
+    val (usage, nPaths) = if (stream) (StreamUsage, 3) else (BatchUsage, 2)
+    def fail(why: String): Nothing = throw new IllegalArgumentException(s"$why; $usage")
+    val (paths, flags) = args.splitAt(nPaths)
+    if (paths.length < nPaths || paths.exists(_.startsWith("--")))
+      fail(s"expected $nPaths paths before the flags")
+    def num[A](arg: String, n: Option[A]): A = n.getOrElse(fail(s"'$arg' is not a number"))
+    var stages = Stages()
+    var png = false
+    var blurRegions, frameIndex = Option.empty[String]
+    @scala.annotation.tailrec def go(rest: List[String]): Unit = rest match {
+      case Nil =>
+      case "--blur-regions" :: t if !stream =>
+        if (t.headOption.forall(_.startsWith("--")))
+          fail("--blur-regions requires a parquet path argument")
+        blurRegions = t.headOption
+        go(t.tail)
+      case arg :: t =>
+        val (flag, eqValue) = arg.span(_ != '=')
+        val value = Option.when(eqValue.nonEmpty)(eqValue.tail)
+        def hamming = Some(value.fold(3)(v => num(arg, v.toIntOption)))
+        (flag, value) match {
+          case ("--png", None) if !stream => png = true
+          case ("--image-dedup", _) => stages = stages.copy(imageDedup = hamming)
+          case ("--audio-dedup", _) => stages = stages.copy(audioDedup = hamming)
+          case ("--voxel", Some(v)) => stages = stages.copy(voxel = Some(num(arg, v.toDoubleOption)))
+          case ("--voxel", None) => fail("--voxel requires an edge length: --voxel=EDGE_METERS")
+          case ("--frame-index", Some(lake)) if stream => frameIndex = Some(lake)
+          case _ => fail(s"unknown argument '$arg'")
+        }
+        go(t)
     }
-    val audio = args.collectFirst {
-      case "--audio-dedup"                     => 3
-      case a if a.startsWith("--audio-dedup=") => a.stripPrefix("--audio-dedup=").toInt
-    }
-    val voxel = args.collectFirst {
-      case a if a.startsWith("--voxel=") => a.stripPrefix("--voxel=").toDouble
-    }
-    (dedup, audio, voxel)
+    go(flags.toList)
+    if (frameIndex.isDefined && stages.imageDedup.isEmpty && stages.audioDedup.isEmpty)
+      fail("--frame-index requires --image-dedup or --audio-dedup " +
+        "(the index persists the dedup fingerprints)")
+    Args(paths, stages, png, blurRegions, frameIndex)
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BagIngest <bags> <out-dir> [--png] [--blur-regions <parquet>] " +
-        "[--image-dedup[=HAMMING]] [--audio-dedup[=HAMMING]] [--voxel=EDGE_METERS]")
+    val a = parseArgs(args.toSeq, stream = false)
     val spark = GraftSession.get()
-    val regions = args.indexOf("--blur-regions") match {
-      case -1 => None
-      case i  =>
-        require(i + 1 < args.length && !args(i + 1).startsWith("--"),
-          "--blur-regions requires a parquet path argument")
-        Some(spark.read.parquet(args(i + 1)))
-    }
-    val (dedup, audio, voxel) = parseStageFlags(args)
-    run(spark, args(0), args(1), args.contains("--png"), regions, dedup, voxel,
-      audioDedup = audio)
+    run(spark, a.paths(0), a.paths(1), a.png, a.blurRegions.map(p => spark.read.parquet(p)),
+      a.stages)
     spark.stop()
   }
 }

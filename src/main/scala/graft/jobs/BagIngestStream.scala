@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType, TimestampType}
 
@@ -18,7 +18,20 @@ import graft.sources.rosbag.RosbagReader
   * Delivery: foreachBatch is at-least-once, so each batch OVERWRITES its
   * own `<table>/batch=<id>/` subdirectory — a retried batch rewrites the
   * same directory instead of appending duplicates (effectively-once).
-  * Readers see `batch` as a discovered partition column.
+  * Readers see `batch` as a discovered partition column. The per-recording
+  * `trajectory/` rollup is the batch job's only: a micro-batch holds
+  * partial recordings.
+  *
+  * The inputs that exist only with a batch id ([[BagIngest.StreamInputs]])
+  * land as versioned SnapshotLake tables, one version per batch (a
+  * redelivered batch re-reads as the same version), each row tagged with
+  * its `ingest_batch`:
+  *   <out>/frame_drift/  frame-brightness PSI against a frozen reference
+  *   <out>/clip_drift/   clip-RMS PSI against a frozen reference
+  *   <out>/cloud_drift/  per-sweep point-population PSI against a frozen reference
+  *   <out>/sensor_sync/  camera frames vs clip and cloud timestamps per window
+  * and `frameIndex` persists the dedup fingerprints to its own lake, which
+  * makes `frame_dedup/` and `clip_dedup/` cross-batch.
   *
   * Producer contract (the standard file-source one): uploads must be
   * staged outside the watch glob (different directory or extension) and
@@ -38,33 +51,8 @@ object BagIngestStream {
     StructField("content", BinaryType)))
 
   def start(spark: SparkSession, watchDir: String, out: String, checkpoint: String,
-      piiRegions: Option[DataFrame] = None, imageDedup: Option[Int] = None,
-      voxel: Option[Double] = None,
-      frameIndexLake: Option[String] = None,
-      audioDedup: Option[Int] = None,
-      // q110's PSI gauge for the CAMERA column (a monitor, not a gate):
-      // with a frozen brightness reference supplied
-      // (ImageOps.brightnessDriftReference, captured offline from a
-      // healthy recording's RAW frames), every batch's brightness
-      // distribution is PSI-scored and the bucket table + rollup land in
-      // the versioned <out>/frame_drift table — the alarm that fires when
-      // a camera goes bad (exposure fault, obstruction) BEFORE any
-      // downstream consumer errors. The CorpusPrepStream driftRef
-      // convention, one modality over.
-      frameDriftRef: Option[graft.operators.TextAnalysisOps.DriftRef] = None,
-      // the same gauge on the MICROPHONE column (per-clip RMS vs a frozen
-      // healthy reference — AudioOps.rmsDriftReference), landing in
-      // <out>/clip_drift. Four modalities, one PSI contract.
-      clipDriftRef: Option[graft.operators.TextAnalysisOps.DriftRef] = None,
-      // and on the LIDAR column (per-sweep point population vs a frozen
-      // healthy reference — PointCloudOps.cloudDriftReference), landing
-      // in <out>/cloud_drift. Fifth modality, same PSI contract.
-      cloudDriftRef: Option[graft.operators.TextAnalysisOps.DriftRef] = None,
-      // cross-modal sensor-sync audit (q111's lake form, TemporalOps
-      // .sensorSyncLakeOf) per arriving batch: camera frames vs clip and
-      // cloud timestamps, per (bag, window of this many ns), landing in
-      // the versioned <out>/sensor_sync table
-      syncAuditBucketNs: Option[Long] = None): StreamingQuery =
+      piiRegions: Option[DataFrame] = None, stages: BagIngest.Stages = BagIngest.Stages(),
+      stream: BagIngest.StreamInputs = BagIngest.StreamInputs()): StreamingQuery =
     spark.readStream.format("binaryFile")
       .option("pathGlobFilter", "*.bag")
       .schema(fileSchema)
@@ -90,33 +78,16 @@ object BagIngestStream {
           // (FrameDedupIndex, the text band guard's multimodal twin).
           // Voxel downsampling is per-cloud and thus batch-boundary-free
           // by construction.
-          BagIngest.writeTablesOf(sp, msgs, out, SaveMode.Overwrite,
-            writePng = false, piiRegions, tableSuffix = s"/batch=$batchId",
-            imageDedup = imageDedup, voxel = voxel, audioDedup = audioDedup,
-            frameIndex = frameIndexLake.map(l => (l, batchId)),
-            frameDrift = frameDriftRef.map(r => (r, batchId)),
-            clipDrift = clipDriftRef.map(r => (r, batchId)),
-            cloudDrift = cloudDriftRef.map(r => (r, batchId)),
-            syncAudit = syncAuditBucketNs.map(b => (b, batchId)))
+          BagIngest.writeTablesOf(sp, msgs, out, writePng = false, piiRegions, stages,
+            Some(BagIngest.StreamBatch(batchId, stream)))
         }
       }
       .start()
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: BagIngestStream <watch-dir> <out-dir> <checkpoint-dir> " +
-        "[--image-dedup[=HAMMING]] [--audio-dedup[=HAMMING]] " +
-        "[--voxel=EDGE_METERS] [--frame-index=LAKE_DIR]")
+    val a = BagIngest.parseArgs(args.toSeq, stream = true)
     val spark = GraftSession.get()
-    val (dedup, audio, voxel) = BagIngest.parseStageFlags(args)
-    val frameIndex = args.collectFirst {
-      case a if a.startsWith("--frame-index=") => a.stripPrefix("--frame-index=")
-    }
-    require(frameIndex.isEmpty || dedup.isDefined || audio.isDefined,
-      "--frame-index requires --image-dedup or --audio-dedup " +
-        "(the index persists the dedup fingerprints)")
-    start(spark, args(0), args(1), args(2),
-      imageDedup = dedup, voxel = voxel, audioDedup = audio,
-      frameIndexLake = frameIndex).awaitTermination()
+    start(spark, a.paths(0), a.paths(1), a.paths(2), stages = a.stages,
+      stream = BagIngest.StreamInputs(frameIndex = a.frameIndex)).awaitTermination()
   }
 }

@@ -157,12 +157,34 @@ class BagIngestSpec extends SparkSpec {
 
     val sc = spark.sparkContext
     val cachedBefore = sc.getPersistentRDDs.keySet
+    val lake = dir.resolve("lake")
     val e = intercept[Exception] {
-      graft.jobs.BagIngest.run(spark, bag.toString, dir.resolve("lake").toString, writePng = true)
+      graft.jobs.BagIngest.run(spark, bag.toString, lake.toString, writePng = true)
     }
     assert(msgs(e).exists(_.contains("no AudioInfo")), e)
     GraftTestAccess.drainListenerBus(sc)
     assert(sc.statusTracker.getActiveJobIds().isEmpty)
     assert(sc.getPersistentRDDs.keySet === cachedBefore, "the demux cache outlived the failed ingest")
+    assert(!Files.exists(lake.resolve("png.staging")), "the PNG staging directory outlived the failed ingest")
+  }
+
+  test("a re-ingest into the same lake replaces the PNG frames: none of the " +
+    "first bag's frames is left for the audit to report") {
+    val dir = Files.createTempDirectory("graftreingest")
+    val lake = dir.resolve("lake")
+    val out = lake.toString
+    BagIngest.run(spark, writeBag(dir, "a.bag"), out, writePng = true)
+    // bag b: one frame, at a time none of bag a's frames has
+    val b = dir.resolve("b.bag")
+    Files.write(b, BagWriter.bag(BagWriter.bagHeader, BagWriter.chunk(
+      BagWriter.connection(0, "/cam_front/image_raw", "sensor_msgs/Image") ++
+        BagWriter.message(0, T0 + 10, 0, BagWriter.imagePayload(0, 4, 3, "rgb8",
+          new Array[Byte](4 * 3 * 3))),
+      bz2 = false)))
+    BagIngest.run(spark, b.toString, out, writePng = true)
+    val findings = graft.jobs.PngAudit.audit(spark, spark.read.parquet(s"$out/manifest"), s"$out/png")
+      .collect()
+    assert(findings.isEmpty, findings.mkString("; "))
+    assert(!Files.exists(lake.resolve("png.staging")))
   }
 }

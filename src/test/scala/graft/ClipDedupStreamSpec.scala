@@ -223,7 +223,8 @@ class ClipDedupStreamSpec extends SparkSpec {
     // re-lands the re-level — it must adopt bag 1's landed canonical
     Files.write(watch.resolve("a.bag"), bagOf(pcmA, pcmB))
     val q = graft.jobs.BagIngestStream.start(spark, watch.toString, out, ckpt,
-      audioDedup = Some(3), frameIndexLake = Some(lake))
+      stages = graft.jobs.BagIngest.Stages(audioDedup = Some(3)),
+      stream = graft.jobs.BagIngest.StreamInputs(frameIndex = Some(lake)))
     try {
       q.processAllAvailable()
       val m0 = manifestMap(spark.read.parquet(s"$out/clip_dedup/batch=0"))
@@ -243,7 +244,7 @@ class ClipDedupStreamSpec extends SparkSpec {
     Files.write(bdir.resolve("c.bag"), bagOf(pcmA, pcmB, pcmC))
     val bout = Files.createTempDirectory("cdi-bout").toString
     graft.jobs.BagIngest.run(spark, bdir.toString, bout, writePng = false,
-      audioDedup = Some(3))
+      stages = graft.jobs.BagIngest.Stages(audioDedup = Some(3)))
     val bm = manifestMap(spark.read.parquet(s"$bout/clip_dedup"))
     val t2 = 1600000002L * 1000000000L + 100L
     assert(bm === Map(t0 -> ((t0, true)), t1 -> ((t0, false)), t2 -> ((t2, true))),

@@ -78,7 +78,7 @@ class CloudDriftSpec extends SparkSpec {
     // batch 0: the healthy distribution re-landed — gauge reads 0
     Files.write(watch.resolve("a.bag"), bagOf((0 until 40).map(10 + _)))
     val q = graft.jobs.BagIngestStream.start(spark, watch.toString, out, ckpt,
-      cloudDriftRef = Some(ref))
+      stream = graft.jobs.BagIngest.StreamInputs(cloudDrift = Some(ref)))
     try {
       q.processAllAvailable()
       val b0 = SnapshotLake.read(spark, table)
@@ -104,8 +104,8 @@ class CloudDriftSpec extends SparkSpec {
     // idempotence: a redelivered batch id is a no-op commit
     graft.jobs.BagIngest.writeTablesOf(spark,
       graft.sources.rosbag.RosbagReader.messages(spark, watch.resolve("b.bag").toString),
-      out, org.apache.spark.sql.SaveMode.Overwrite, writePng = false, None,
-      tableSuffix = "/batch=1", cloudDrift = Some((ref, 1L)))
+      out, writePng = false, None, batch = Some(graft.jobs.BagIngest.StreamBatch(1L,
+        graft.jobs.BagIngest.StreamInputs(cloudDrift = Some(ref)))))
     assert(SnapshotLake.versions(spark, table).size === 2,
       "a redelivered batch must not land a new gauge version")
   }

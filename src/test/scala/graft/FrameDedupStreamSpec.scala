@@ -221,7 +221,8 @@ class FrameDedupStreamSpec extends SparkSpec {
     // re-recorded — one exact copy + one single-bit drift
     Files.write(watch.resolve("a.bag"), bagOf(rgb(Map.empty), rgb(Map(10 -> 0))))
     val q = graft.jobs.BagIngestStream.start(spark, watch.toString, out, ckpt,
-      imageDedup = Some(2), frameIndexLake = Some(lake))
+      stages = graft.jobs.BagIngest.Stages(imageDedup = Some(2)),
+      stream = graft.jobs.BagIngest.StreamInputs(frameIndex = Some(lake)))
     try {
       q.processAllAvailable()
       val m0 = manifestMap(spark.read.parquet(s"$out/frame_dedup/batch=0"))

@@ -87,7 +87,7 @@ class FrameDriftSpec extends SparkSpec {
     // batch 0: the healthy distribution re-landed — gauge reads 0
     Files.write(watch.resolve("a.bag"), bagOf((0 until 40).map(_ * 5)))
     val q = graft.jobs.BagIngestStream.start(spark, watch.toString, out, ckpt,
-      frameDriftRef = Some(ref))
+      stream = graft.jobs.BagIngest.StreamInputs(frameDrift = Some(ref)))
     try {
       q.processAllAvailable()
       val b0 = SnapshotLake.read(spark, table)
@@ -113,8 +113,8 @@ class FrameDriftSpec extends SparkSpec {
     // idempotence: a redelivered batch id is a no-op commit
     graft.jobs.BagIngest.writeTablesOf(spark,
       graft.sources.rosbag.RosbagReader.messages(spark, watch.resolve("b.bag").toString),
-      out, org.apache.spark.sql.SaveMode.Overwrite, writePng = false, None,
-      tableSuffix = "/batch=1", frameDrift = Some((ref, 1L)))
+      out, writePng = false, None, batch = Some(graft.jobs.BagIngest.StreamBatch(1L,
+        graft.jobs.BagIngest.StreamInputs(frameDrift = Some(ref)))))
     assert(SnapshotLake.versions(spark, table).size === 2,
       "a redelivered batch must not land a new gauge version")
   }
@@ -161,7 +161,7 @@ class FrameDriftSpec extends SparkSpec {
     }
     Files.write(watch.resolve("a.bag"), bagOf(healthyAmps))
     val q = graft.jobs.BagIngestStream.start(spark, watch.toString, out, ckpt,
-      clipDriftRef = Some(ref))
+      stream = graft.jobs.BagIngest.StreamInputs(clipDrift = Some(ref)))
     try {
       q.processAllAvailable()
       val b0 = SnapshotLake.read(spark, s"$out/clip_drift")

@@ -373,7 +373,7 @@ class RosbagSpec extends SparkSpec {
       BagWriter.bag(BagWriter.bagHeader, BagWriter.chunk(inner, bz2 = false)))
     val out = dir.resolve("lake").toString
     graft.jobs.BagIngest.run(spark, bagDir.toString, out,
-      writePng = false, imageDedup = Some(3))
+      writePng = false, stages = graft.jobs.BagIngest.Stages(imageDedup = Some(3)))
     val manifest = spark.read.parquet(s"$out/frame_dedup").collect()
       .map(r => r.getAs[Long]("time_ns") ->
         (r.getAs[Long]("canon_time_ns"), r.getAs[Boolean]("is_canonical"))).toMap
@@ -641,6 +641,9 @@ class RosbagSpec extends SparkSpec {
       assert(spark.read.parquet(s"$out/odometry").count() === 2)
       // exactly-once: both bags distinct in the lake
       assert(spark.read.parquet(s"$out/images").select("bag").distinct().count() === 2)
+      // the trajectory rollup is per whole recording: the batch job lands
+      // it, a stream batch (partial recordings) does not
+      assert(!Files.exists(java.nio.file.Paths.get(s"$out/trajectory")))
     } finally q.stop()
   }
 
@@ -653,7 +656,7 @@ class RosbagSpec extends SparkSpec {
     Files.copy(java.nio.file.Paths.get(
       writeCloudBag(Seq(BagWriter.pointCloud2Payload(pts)))), watch.resolve("a.bag"))
     val q = graft.jobs.BagIngestStream.start(spark, watch.toString, out, ckpt,
-      voxel = Some(1.0))
+      stages = graft.jobs.BagIngest.Stages(voxel = Some(1.0)))
     try {
       q.processAllAvailable()
       val vox = spark.read.parquet(s"$out/lidar_voxel").collect()
@@ -682,11 +685,10 @@ class RosbagSpec extends SparkSpec {
   test("writeTablesOf: re-running the same batch suffix is idempotent") {
     val bag = writeTestBag(bz2 = false)
     val out = Files.createTempDirectory("idem").toString
-    import org.apache.spark.sql.SaveMode
     // the foreachBatch retry path: same batch id -> same directory overwritten
     (1 to 2).foreach { _ =>
       graft.jobs.BagIngest.writeTablesOf(spark, RosbagReader.messages(spark, bag),
-        out, SaveMode.Overwrite, writePng = false, None, tableSuffix = "/batch=7")
+        out, writePng = false, None, batch = Some(graft.jobs.BagIngest.StreamBatch(7L)))
     }
     assert(spark.read.parquet(s"$out/images").count() === 2) // not 4
   }
@@ -884,7 +886,7 @@ class RosbagSpec extends SparkSpec {
     val bag = writeCloudBag(Seq(BagWriter.pointCloud2Payload(pts)))
     val out = Files.createTempDirectory("graftvoxlake").toString
     graft.jobs.BagIngest.run(spark, bag, out, writePng = false,
-      voxel = Some(1.0))
+      stages = graft.jobs.BagIngest.Stages(voxel = Some(1.0)))
     val vox = spark.read.parquet(s"$out/lidar_voxel")
       .orderBy("vx", "vy", "vz").collect()
     assert(vox.length === 3)

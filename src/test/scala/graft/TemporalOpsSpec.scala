@@ -282,7 +282,7 @@ class TemporalOpsSpec extends SparkSpec {
     val table = s"$out/sensor_sync"
     java.nio.file.Files.write(watch.resolve("a.bag"), multiModalBag)
     val q = graft.jobs.BagIngestStream.start(spark, watch.toString, out, ckpt,
-      syncAuditBucketNs = Some(60L * 1000000000L))
+      stream = graft.jobs.BagIngest.StreamInputs(syncAuditBucketNs = Some(60L * 1000000000L)))
     try {
       q.processAllAvailable()
       val b0 = SnapshotLake.read(spark, table)
@@ -310,8 +310,8 @@ class TemporalOpsSpec extends SparkSpec {
     // idempotence: a redelivered batch id is a no-op commit
     graft.jobs.BagIngest.writeTablesOf(spark,
       graft.sources.rosbag.RosbagReader.messages(spark, watch.resolve("b.bag").toString),
-      out, org.apache.spark.sql.SaveMode.Overwrite, writePng = false, None,
-      tableSuffix = "/batch=1", syncAudit = Some((60L * 1000000000L, 1L)))
+      out, writePng = false, None, batch = Some(graft.jobs.BagIngest.StreamBatch(1L,
+        graft.jobs.BagIngest.StreamInputs(syncAuditBucketNs = Some(60L * 1000000000L)))))
     assert(SnapshotLake.versions(spark, table).size === 2,
       "a redelivered batch must not land a new audit version")
   }
