@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.GraftSession
@@ -70,13 +70,19 @@ object BagIngest {
     * persisted MEMORY_AND_DISK, which every sink reads through
     * `createDataset`, so no columnar cache is built and no sink copies the
     * bag out of one. The one action that fills the cache is also the type
-    * census: it returns the (datatype, has-definition) kinds the bags hold.
+    * census: it returns the (bag, datatype, has-definition) kinds it read.
     * A typed table none of whose kinds is present (images, clips, laser,
-    * odometry, wrench, std_msgs, generic, and the manifest and trajectory
-    * derived from images and odometry) lands empty with the schema its
+    * odometry, wrench, std_msgs, generic) lands empty with the schema its
     * pipeline would produce, and that pipeline never runs. A present kind
     * always runs its sink, so integrity failures (e.g. AudioData without
-    * AudioInfo) still fire. The optional stages run whatever the census says.
+    * AudioInfo) still fire. The tables derived from a landed one (the
+    * manifest and the PNG frames from images, the trajectory from odometry)
+    * always run over their landed parent, empty or not. The optional stages
+    * run whatever the census says.
+    *
+    * The PII regions are bounded to the census's bags before the blur,
+    * since its box list is built from the regions alone; so a regions table
+    * may cover a whole stream.
     *
     * Then the sinks that do not read each other's output land concurrently
     * ([[graft.Branches]]), one Spark job stream per branch, since most of
@@ -92,7 +98,7 @@ object BagIngest {
     * the previous bag's frames behind, and a failed one leaves the old
     * frames and no staging directory.
     *
-    * An ingest needs about 75 generated classes, within Spark's default
+    * An ingest needs about 70 generated classes, within Spark's default
     * codegen cache of 100, so later bags reuse the first bag's classes
     * instead of compiling them again.
     *
@@ -120,7 +126,14 @@ object BagIngest {
 
     val (png, pngStaging) = (new Path(s"$out/png"), new Path(s"$out/png.staging"))
     val fs = png.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (writePng) { fs.delete(pngStaging, true); fs.mkdirs(pngStaging) }
+    // the PNG sink writes files from the executors, so the lake must be on
+    // the local file system; the directory comes from the qualified URI, as
+    // a `file:` string taken for a path is a relative one
+    val pngDir = Option.when(writePng) {
+      require(fs.getScheme == "file", s"--png writes local files, but $out is not local")
+      fs.delete(pngStaging, true); fs.mkdirs(pngStaging)
+      new java.io.File(fs.makeQualified(pngStaging).toUri)
+    }
 
     // parse every bag exactly once: the demuxed message set feeds every
     // output table (the reference also demuxes in a single streaming pass)
@@ -129,37 +142,35 @@ object BagIngest {
       // materialized before the branches start, so they read the cache
       // instead of each waiting on the same demux task
       val census = demux
-        .mapPartitions(_.map(m => (m.datatype, m.msg_def.nonEmpty)).toSet.iterator)
+        .mapPartitions(_.map(m => (m.path, m.datatype, m.msg_def.nonEmpty)).toSet.iterator)
         .collect().toSet
-      def holds(reads: RosbagReader.Reads): Boolean = census.exists(reads.tupled)
+      def holds(reads: RosbagReader.Reads): Boolean =
+        census.exists { case (_, datatype, hasDef) => reads(datatype, hasDef) }
       val msgs = {
         import spark.implicits._
         spark.createDataset(demux)
       }
-      def saveEmpty(view: DataFrame, name: String): Unit =
-        save(spark.createDataFrame(java.util.List.of[Row](), view.schema), name)
-      // true when the view ran; false when the census found none of the
-      // kinds it reads, and it landed empty without running
-      def land(name: String, reads: RosbagReader.Reads)(view: => DataFrame): Boolean =
-        if (holds(reads)) { save(view, name); true }
-        else { saveEmpty(view, name); false }
+      // a view none of whose kinds the census found lands empty, unrun
+      def land(name: String, reads: RosbagReader.Reads)(view: => DataFrame): Unit = save(
+        if (holds(reads)) view else spark.createDataFrame(java.util.List.of[Row](), view.schema), name)
       val rawImages = RosbagReader.imagesOf(spark, msgs)
 
       def imagesBranch(): Unit = {
         // PII anonymization (reference: select-labelling-imgs anonymize_PII):
-        // with a region table, pixels land in the lake already blurred
-        val ran = land("images", RosbagReader.readsImages)(piiRegions match {
-          case Some(regions) => ImageOps.blurFrames(spark, rawImages, regions).drop("n_blurred")
+        // with a region table, pixels land in the lake already blurred. The
+        // box list is built from the regions alone, so they are bounded to
+        // the bags the census saw
+        land("images", RosbagReader.readsImages)(piiRegions match {
+          case Some(regions) => ImageOps.blurFrames(spark, rawImages,
+            regions.where(col("bag").isin(census.map(_._1).toSeq: _*))).drop("n_blurred")
           case None          => rawImages
         })
         // the manifest's columns are untouched by blur, so it is built from
         // a column-pruned scan of the landed frames instead of decoding and
         // numbering them again
-        if (!ran) saveEmpty(RosbagReader.mp4ManifestOf(rawImages), "manifest")
-        else graft.Branches.awaitAll(Seq[() => Unit](
+        graft.Branches.awaitAll(Seq[() => Unit](
           () => save(RosbagReader.mp4ManifestOf(landed("images")), "manifest"),
-          () => if (writePng) {
-            val dir = new java.io.File(pngStaging.toString)
+          () => pngDir.foreach { dir =>
             ImageOps.toPng(spark, landed("images"))
               .foreachPartition { it: Iterator[ImageOps.PngFrame] =>
                 // executor-side sink: in production this is the S3 upload the
@@ -174,12 +185,9 @@ object BagIngest {
       }
 
       def odometryBranch(): Unit = {
-        val odometry = RosbagReader.odometryOf(spark, msgs)
-        val ran = land("odometry", RosbagReader.readsOdometry)(odometry)
-        if (batch.isEmpty) {
-          if (ran) save(graft.operators.TrajectoryOps.trajectoryStats(landed("odometry")), "trajectory")
-          else saveEmpty(graft.operators.TrajectoryOps.trajectoryStats(odometry), "trajectory")
-        }
+        land("odometry", RosbagReader.readsOdometry)(RosbagReader.odometryOf(spark, msgs))
+        if (batch.isEmpty)
+          save(graft.operators.TrajectoryOps.trajectoryStats(landed("odometry")), "trajectory")
       }
 
       // the optional stages run one after another in this order, after the
@@ -231,7 +239,7 @@ object BagIngest {
             RosbagReader.pointCloudPointsOf(spark, msgs), ref))
         // cross-modal SENSOR-SYNC audit (q111's lake form at ingest): per
         // (bag, window), the camera frames' alignment against each other
-        // landed modality — clip timestamps and per-sweep cloud timestamps —
+        // modality — the landed clips' timestamps and per-sweep cloud ones —
         // as one versioned <out>/sensor_sync table with a `sensor` column
         // naming the probed arm (batch-id idempotent). A rig with a clock
         // offset or a dropping sensor shows up here in ITS OWN arriving
@@ -244,7 +252,7 @@ object BagIngest {
             graft.operators.TemporalOps.sensorSyncLakeOf(frames, sensor, bucketNs)
               .withColumn("sensor", lit(name))
           commit(b, "sensor_sync",
-            arm("clips", RosbagReader.audioClipsOf(spark, msgs).select("bag", "time_ns"))
+            arm("clips", landed("clips").select("bag", "time_ns"))
               .unionByName(arm("clouds",
                 RosbagReader.pointCloudsOf(spark, msgs).select("bag", "time_ns"))))
         }
@@ -318,17 +326,17 @@ object BagIngest {
     }
   }
 
-  /** A command line of either CLI: its positional paths, the stages, and
-    * the flags only one CLI takes (`--png` and `--blur-regions` the batch
-    * job's, `--frame-index` the streaming job's). */
+  /** A command line of either CLI: its positional paths, the stages, the
+    * PII regions, and the flags only one CLI takes (`--png` the batch job's,
+    * `--frame-index` the streaming job's). */
   private[jobs] final case class Args(paths: Seq[String], stages: Stages, png: Boolean,
       blurRegions: Option[String], frameIndex: Option[String])
 
   private val BatchUsage = "usage: BagIngest <bags> <out-dir> [--png] [--blur-regions <parquet>] " +
     "[--image-dedup[=HAMMING]] [--audio-dedup[=HAMMING]] [--voxel=EDGE_METERS]"
   private val StreamUsage = "usage: BagIngestStream <watch-dir> <out-dir> <checkpoint-dir> " +
-    "[--image-dedup[=HAMMING]] [--audio-dedup[=HAMMING]] [--voxel=EDGE_METERS] " +
-    "[--frame-index=LAKE_DIR]"
+    "[--blur-regions <parquet>] [--image-dedup[=HAMMING]] [--audio-dedup[=HAMMING]] " +
+    "[--voxel=EDGE_METERS] [--frame-index=LAKE_DIR]"
 
   /** The one flag grammar of both CLIs, so the stages they share cannot
     * drift between them. The positional paths come first (two, or three
@@ -349,7 +357,7 @@ object BagIngest {
     var blurRegions, frameIndex = Option.empty[String]
     @scala.annotation.tailrec def go(rest: List[String]): Unit = rest match {
       case Nil =>
-      case "--blur-regions" :: t if !stream =>
+      case "--blur-regions" :: t =>
         if (t.headOption.forall(_.startsWith("--")))
           fail("--blur-regions requires a parquet path argument")
         blurRegions = t.headOption

@@ -22,6 +22,10 @@ import graft.sources.rosbag.RosbagReader
   * `trajectory/` rollup is the batch job's only: a micro-batch holds
   * partial recordings.
   *
+  * With PII regions, each batch's frames land blurred like the batch job's.
+  * The regions are bounded to the bags of each batch before the blur, so
+  * one regions table may cover the whole stream.
+  *
   * The inputs that exist only with a batch id ([[BagIngest.StreamInputs]])
   * land as versioned SnapshotLake tables, one version per batch (a
   * redelivered batch re-reads as the same version), each row tagged with
@@ -87,7 +91,7 @@ object BagIngestStream {
   def main(args: Array[String]): Unit = {
     val a = BagIngest.parseArgs(args.toSeq, stream = true)
     val spark = GraftSession.get()
-    start(spark, a.paths(0), a.paths(1), a.paths(2), stages = a.stages,
-      stream = BagIngest.StreamInputs(frameIndex = a.frameIndex)).awaitTermination()
+    start(spark, a.paths(0), a.paths(1), a.paths(2), a.blurRegions.map(p => spark.read.parquet(p)),
+      a.stages, BagIngest.StreamInputs(frameIndex = a.frameIndex)).awaitTermination()
   }
 }

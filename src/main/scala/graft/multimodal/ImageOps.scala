@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -530,26 +530,37 @@ object ImageOps {
       .withColumn("y2", least(col("height").cast("long"),
         (col("region_y") + col("region_h") + margin).cast("long")))
 
-  /** Execute the blur plan on the raw uint8 buffers: Gaussian-blur each
-    * frame that has detected PII regions and composite the blurred pixels
-    * inside the padded boxes, leaving every byte outside them bit-identical
-    * — the reference's anonymize_PII (select-labelling-imgs.py:58-124) as a
-    * distributed column op. Schema-preserving plus an `n_blurred` region
-    * count; frames with no regions pass through byte-identical.
+  /** Execute the blur on the raw uint8 buffers: Gaussian-blur each frame
+    * that has detected PII regions and composite the blurred pixels inside
+    * the boxes padded by `margin`, leaving every byte outside them
+    * bit-identical — the reference's anonymize_PII
+    * (select-labelling-imgs.py:58-124) as a distributed column op.
+    * Schema-preserving plus an `n_blurred` region count; frames with no
+    * regions pass through byte-identical.
     *
-    * The per-frame box list is a bounded collect_list (detections per
-    * frame, tens at most — NOT frames per recording), so the aggregation
-    * buffer stays small at any corpus size.
+    * The box list is built from the regions alone, grouped per frame key,
+    * so the frames are read once; the kernel clamps each box to its frame.
+    * A null coordinate or a padded bound past `Int` range reaches the frame
+    * edge. Every region ends up in the broadcast box list, matched or not,
+    * so the caller bounds the regions to its frames' bags, as the ingest
+    * does. The list per frame is a bounded collect_list (detections per
+    * frame, tens at most), so the aggregation buffer stays small.
     */
   def blurFrames(spark: SparkSession, frames: DataFrame, regions: DataFrame,
       sigma: Double = 15.0, margin: Int = 10): DataFrame = {
-    val boxes = blurPlan(frames, regions, margin)
+    // padded in long, then saturated to [0, Int.MaxValue]: a null lower
+    // bound reads 0 and a null upper bound the maximum, and no bound wraps
+    // when taken as an Int
+    val Seq(x, y, w, h) = Seq("region_x", "region_y", "region_w", "region_h").map(col(_).cast("long"))
+    def lo(c: Column) = least(lit(Int.MaxValue.toLong), greatest(lit(0L), c))
+    def hi(c: Column) = greatest(lit(0L), least(lit(Int.MaxValue.toLong), c))
+    val boxes = regions
       .groupBy("bag", "topic", "time_ns")
-      .agg(collect_list(array(col("x1"), col("y1"), col("x2"), col("y2"))).as("__boxes"))
-    // broadcast: the box list holds at most one small row per frame of the
-    // same input, so it is always far smaller than the pixel side; left to
-    // AQE, the join shuffled the pixels too whenever that side's exchange
-    // finished first
+      .agg(collect_list(array(lo(x - margin), lo(y - margin), hi(x + w + margin), hi(y + h + margin)))
+        .as("__boxes"))
+    // broadcast: the box list holds one small row per frame with regions,
+    // far smaller than the pixel side; left to AQE, the join shuffled the
+    // pixels too whenever that side's exchange finished first
     val joined = frames.join(broadcast(boxes), Seq("bag", "topic", "time_ns"), "left")
     val cols = joined.columns
     val iW = cols.indexOf("width"); val iH = cols.indexOf("height")

@@ -50,7 +50,8 @@ class BagIngestArgsSpec extends AnyFunSuite {
     assert(rejected(batch("--image-dedupe")).contains("unknown argument '--image-dedupe'"))
     assert(rejected(batch("--frame-index=lake")).contains("unknown argument"))
     assert(rejected(stream("--audio-dedupe=2")).contains("unknown argument"))
-    assert(rejected(stream("--blur-regions", "r.parquet")).contains("unknown argument"))
+    // the PII regions are both CLIs' flag, so the streaming job takes it
+    assert(stream("--blur-regions", "r.parquet").blurRegions === Some("r.parquet"))
     assert(rejected(stream("--png")).contains("unknown argument"))
     // a stray positional after the flags is not a flag this CLI takes either
     assert(rejected(batch("--png", "extra")).contains("unknown argument 'extra'"))

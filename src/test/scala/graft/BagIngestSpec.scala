@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.GraftTestAccess
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 import graft.jobs.BagIngest
 import graft.sources.rosbag.RosbagReader
@@ -119,6 +120,36 @@ class BagIngestSpec extends SparkSpec {
     val (landedPx, rawPx) = (pixels(spark.read.parquet(s"$out/images")), pixels(raw))
     assert(landedPx.keySet === rawPx.keySet)
     assert(landedPx.count { case (k, v) => v != rawPx(k) } === 2)
+  }
+
+  test("a regions table that also names bags outside the ingest lands the same images " +
+    "as one limited to the ingest") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftregions")
+    val bag = writeBag(dir, "a.bag")
+    val own = regionsOf(bag)
+    // whole-frame regions at the same topics and times, keyed by other bags
+    val others = own.select("topic", "time_ns").distinct()
+      .crossJoin(Seq("file:/elsewhere/b.bag", "file:/elsewhere/c.bag").toDF("bag"))
+      .select($"bag", $"topic", $"time_ns", lit(0L).as("region_x"), lit(0L).as("region_y"),
+        lit(4L).as("region_w"), lit(3L).as("region_h"))
+    def images(name: String, regions: DataFrame): Seq[(String, Long, Seq[Byte])] = {
+      val out = dir.resolve(name).toString
+      BagIngest.run(spark, bag, out, writePng = false, piiRegions = Some(regions))
+      spark.read.parquet(s"$out/images").select("topic", "time_ns", "pixels").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq))
+        .sortBy(r => (r._1, r._2)).toSeq
+    }
+    assert(images("wide", own.unionByName(others)) === images("own", own))
+  }
+
+  test("a lake named by a file: URI gets every PNG frame") {
+    val dir = Files.createTempDirectory("graftpnguri")
+    val out = "file:" + dir.resolve("lake")
+    BagIngest.run(spark, writeBag(dir, "a.bag"), out, writePng = true)
+    val findings = graft.jobs.PngAudit.audit(spark, spark.read.parquet(s"$out/manifest"), s"$out/png")
+      .collect()
+    assert(findings.isEmpty, findings.mkString("; "))
   }
 
   test("a second ingest of a benchmark-shaped bag compiles no generated class") {

@@ -133,8 +133,15 @@ class MultimodalSpec extends SparkSpec {
 
   test("blurFrames(): end-to-end over a bag, schema-preserving") {
     val frames = RosbagReader.images(spark, bagPath).withColumn("bag", lit(bagPath))
+    val t0 = 1600000000L * 1000000000L
     val regions = spark.createDataFrame(Seq(
-      (bagPath, "/cam0/image_raw", 1600000000L * 1000000000L, 0L, 0L, 1L, 1L)
+      (bagPath, "/cam0/image_raw", t0, Option(0), Option(0), Option(1), Option(1)),
+      // a null width reaches the right edge
+      (bagPath, "/cam0/image_raw", t0 + 2_000_000_000L, Option(1), Option(0), None, Option(1)),
+      // x + w runs past Int range: the box reaches the edge, it does not
+      // wrap to a negative bound that blurs nothing
+      (bagPath, "/cam0/image_raw", t0 + 3_000_000_000L, Option(1), Option(0),
+        Option(Int.MaxValue), Option(1))
     )).toDF("bag", "topic", "time_ns", "region_x", "region_y", "region_w", "region_h")
     val out = ImageOps.blurFrames(spark, frames, regions, sigma = 1.0, margin = 0)
     assert(out.columns.toSeq === frames.columns.toSeq :+ "n_blurred")
@@ -147,6 +154,15 @@ class MultimodalSpec extends SparkSpec {
     // frames without a matching region pass through byte-identical
     assert(rows(1).getAs[Int]("n_blurred") === 0)
     assert(rows(1).getAs[Array[Byte]]("pixels").toSeq === Seq[Byte](10, 20, 30, 50, 60, 70))
+    // both edge cases blur pixel 1 only
+    val pixel1 = PixelKernels.blurRegions(Array[Byte](10, 20, 30, 50, 60, 70), 2, 1, 3, 6,
+      Seq((1, 0, 2, 1)), sigma = 1.0).toSeq
+    assert(pixel1.take(3) === Seq[Byte](10, 20, 30))
+    assert(pixel1 !== Seq[Byte](10, 20, 30, 50, 60, 70))
+    rows.drop(2).foreach { r =>
+      assert(r.getAs[Int]("n_blurred") === 1)
+      assert(r.getAs[Array[Byte]]("pixels").toSeq === pixel1)
+    }
   }
 
   test("blurFrames(): the box list joins by broadcast, so the pixels are never shuffled") {
@@ -159,6 +175,13 @@ class MultimodalSpec extends SparkSpec {
     val plan = ImageOps.blurFrames(spark, frames, regions).queryExecution.executedPlan.toString
     assert(plan.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftOuter")), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
+    // the box list is built from the regions alone, so the frames' source
+    // is scanned once, by the pixel side
+    val lake = Files.createTempDirectory("blurscan").resolve("frames").toString
+    frames.write.parquet(lake)
+    val fromLake = ImageOps.blurFrames(spark, spark.read.parquet(lake), regions)
+      .queryExecution.executedPlan.toString
+    assert(fromLake.linesIterator.count(_.contains("FileScan parquet")) === 1, fromLake)
   }
 
   test("resize(): executes the plan, feeds toPng") {
