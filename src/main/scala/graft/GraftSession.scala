@@ -10,6 +10,14 @@ import org.apache.spark.sql.SparkSession
   * covers the dimension tables, and the caller picks the master and the
   * shuffle width ([[get]] takes both from spark-submit when it sets them,
   * else from the local core count).
+  *
+  * The extensions (`graft.plans.GraftExtensions`) add one AQE rule beside
+  * these confs: [[graft.plans.SmallSortRule]] sorts a global sort's input
+  * in one partition when Spark estimates it at no more than
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, which drops the
+  * range-bounds sampling job. Like the broadcast threshold, it trusts
+  * Catalyst's size estimate, refreshed from runtime statistics once the
+  * stages below have run.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

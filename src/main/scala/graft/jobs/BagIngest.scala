@@ -25,7 +25,9 @@ import graft.sources.rosbag.RosbagReader
   *   <out>/laser/ odometry/ wrench/ std_msgs/   typed topic tables
   *   <out>/generic/     (slot-path -> value) rows of every defined topic
   *   <out>/manifest/    per-recording mp4/frame manifest
-  *   <out>/trajectory/  per-recording ego-motion rollup of odometry
+  *   <out>/trajectory/  per-recording ego-motion rollup of odometry, in one
+  *                      file: the rollup is small, so its sort by (bag,
+  *                      topic) runs in one partition (plans.SmallSortRule)
   *   <out>/frame_dedup/ canonical-frame manifest (with --image-dedup)
   *   <out>/clip_dedup/  canonical-clip manifest (with --audio-dedup)
   *   <out>/lidar_voxel/ voxel-downsampled PointCloud2 points (with --voxel)
@@ -98,9 +100,14 @@ object BagIngest {
     * the previous bag's frames behind, and a failed one leaves the old
     * frames and no staging directory.
     *
-    * An ingest needs about 70 generated classes, within Spark's default
-    * codegen cache of 100, so later bags reuse the first bag's classes
-    * instead of compiling them again.
+    * An ingest's cold set-up compiles 69 generated classes, within Spark's
+    * default codegen cache of 100, so later bags can reuse the first bag's
+    * classes instead of compiling them again. Whether they do depends on
+    * each of the cache's 4 LRU segments of 25 entries, not on the total: a
+    * class lands in a segment by its classloader's identity hash, and in
+    * local mode a whole-stage class takes one entry under the driver's
+    * classloader and one under the executor's, so the split between
+    * segments, and with it the fit, can differ from one JVM to the next.
     *
     * The batch job also lands the per-recording ego-motion rollup over the
     * odometry table (TrajectoryOps — path/speeds/tortuosity/dwell + the

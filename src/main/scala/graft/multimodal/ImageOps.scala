@@ -521,14 +521,16 @@ object ImageOps {
   /** Append margin-padded, frame-clamped box bounds to a frames×regions
     * join — the ONE definition of the clamping rule, shared by the blur
     * work-list and the patch cropper so they can never diverge. */
-  private def clampBounds(joined: DataFrame, margin: Int): DataFrame =
+  private def clampBounds(joined: DataFrame, margin: Int): DataFrame = {
+    // padded in long, so an Int-typed region near the Int range saturates
+    // at the frame edge instead of overflowing
+    val Seq(x, y, w, h) = Seq("region_x", "region_y", "region_w", "region_h").map(col(_).cast("long"))
     joined
-      .withColumn("x1", greatest(lit(0L), (col("region_x") - margin).cast("long")))
-      .withColumn("y1", greatest(lit(0L), (col("region_y") - margin).cast("long")))
-      .withColumn("x2", least(col("width").cast("long"),
-        (col("region_x") + col("region_w") + margin).cast("long")))
-      .withColumn("y2", least(col("height").cast("long"),
-        (col("region_y") + col("region_h") + margin).cast("long")))
+      .withColumn("x1", greatest(lit(0L), x - margin))
+      .withColumn("y1", greatest(lit(0L), y - margin))
+      .withColumn("x2", least(col("width").cast("long"), x + w + margin))
+      .withColumn("y2", least(col("height").cast("long"), y + h + margin))
+  }
 
   /** Execute the blur on the raw uint8 buffers: Gaussian-blur each frame
     * that has detected PII regions and composite the blurred pixels inside

@@ -416,5 +416,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // interval-overlap theta join -> binned equi-join (fires only when
     // spark.graft.rangeJoin.binWidth is set positive)
     ext.injectOptimizerRule(_ => RangeJoinRule)
+    // a global sort of a result under one advisory partition sorts in one
+    // partition: no range-bounds sampling job (AQE plans only)
+    ext.injectQueryStagePrepRule(_ => SmallSortRule)
   }
 }

@@ -1,9 +1,13 @@
 package graft
 
 import org.apache.spark.SparkConf
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The production mains' session shape. Pure: no SparkSession starts. */
+import graft.plans.SmallSortRule
+
+/** The production mains' session shape. Only the wiring case starts a
+  * session; the others read a `SparkConf`. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("get() keeps the master and shuffle width spark-submit sets") {
@@ -17,5 +21,10 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.masterAndPartitions(new SparkConf(false), 4) === ("local[4]", 4))
     val masterOnly = new SparkConf(false).set("spark.master", "yarn")
     assert(GraftSession.masterAndPartitions(masterOnly, 6) === ("yarn", 6))
+  }
+
+  test("a GraftSession session runs SmallSortRule in AQE's query-stage preparation") {
+    val s = GraftSession.builder("local[4]", 4).getOrCreate().asInstanceOf[ClassicSession]
+    assert(s.sessionState.adaptiveRulesHolder.queryStagePrepRules.contains(SmallSortRule))
   }
 }

@@ -230,6 +230,26 @@ class MultimodalSpec extends SparkSpec {
     assert(p.getAs[Long]("x1") === 0L && p.getAs[Long]("x2") === 2L) // clamped to width
   }
 
+  /** An Int-typed region whose padded right edge passes Int range. */
+  private def wideIntRegion = spark.createDataFrame(Seq(
+    (bagPath, "/cam0/image_raw", 1600000000L * 1000000000L, 1, 0, Int.MaxValue, 1)
+  )).toDF("bag", "topic", "time_ns", "region_x", "region_y", "region_w", "region_h")
+
+  test("blurPlan(): an Int region past Int range clamps to the frame edge, it does not overflow") {
+    val fr = RosbagReader.images(spark, bagPath).withColumn("bag", lit(bagPath))
+    val plan = ImageOps.blurPlan(fr, wideIntRegion).collect()
+    assert(plan.length === 1)
+    assert(plan(0).getAs[Long]("x1") === 0L && plan(0).getAs[Long]("x2") === 2L)
+  }
+
+  test("cropBoxes(): an Int region past Int range clamps to the frame edge, it does not overflow") {
+    val fr = RosbagReader.images(spark, bagPath).withColumn("bag", lit(bagPath))
+    val out = ImageOps.cropBoxes(spark, fr, wideIntRegion, margin = 0).collect()
+    assert(out.length === 1)
+    assert(out(0).getAs[Long]("x1") === 1L && out(0).getAs[Long]("x2") === 2L)
+    assert(out(0).getAs[Array[Byte]]("pixels").toSeq === Seq[Byte](50, 60, 70))
+  }
+
   test("cropBoxes -> PNG -> TarShards: the patch-export path end to end") {
     import spark.implicits._
     import graft.jobs.TarShards
